@@ -102,6 +102,7 @@ def build_summary(
     load_before: tuple[float, ...],
     load_after: tuple[float, ...],
     jvm_recycle: int = 0,
+    cpus: int | None = None,
 ) -> dict:
     """The compact final-line payload. Everything the gate and the
     noise-band protocol need; nothing that grows with run count."""
@@ -113,11 +114,12 @@ def build_summary(
         "sf": sf,
         # Ambient-load context (VERDICT r9 item 5): 1/5/15-min load
         # averages straddling the run + the cpu count the local[]
-        # master actually got. BASELINE.md's noise-band protocol reads
-        # these before calling a drift a riser.
+        # master actually got (the live session's defaultParallelism,
+        # not the host's core count). BASELINE.md's noise-band protocol
+        # reads these before calling a drift a riser.
         "loadavg_before": load_before,
         "loadavg_after": load_after,
-        "cpus": os.cpu_count(),
+        "cpus": cpus,
         "timed_runs": 3,
         # queries per fresh JVM (0 = whole sweep in one JVM)
         "jvm_recycle": jvm_recycle,
@@ -133,9 +135,10 @@ def segments(names: list[str], size: int) -> list[list[str]]:
 
 def run_queries(
     names: list[str], sf_dir: str
-) -> tuple[dict[str, float], dict[str, list[float]]]:
+) -> tuple[dict[str, float], dict[str, list[float]], int]:
     """Warm-up + min-of-3 timing for the given queries in THIS
-    process's SparkSession (created on first use)."""
+    process's SparkSession (created on first use). Also returns the
+    session's defaultParallelism: the N of the local[N] that ran."""
     from sd2_drp_experimentgen_spark.functions.helpers import (
         release_persisted,
     )
@@ -175,7 +178,7 @@ def run_queries(
             release_persisted()
         timings[name] = min(runs)
         runs_all[name] = runs
-    return timings, runs_all
+    return timings, runs_all, spark.sparkContext.defaultParallelism
 
 
 SEGMENT_ENV = "SPARK_GRAFT_BENCH_SEGMENT"
@@ -184,8 +187,8 @@ SEGMENT_ENV = "SPARK_GRAFT_BENCH_SEGMENT"
 def child_main(sf_dir: str) -> None:
     """Segment subprocess: time the env-given queries, emit ONE line."""
     names = json.loads(os.environ[SEGMENT_ENV])
-    timings, runs_all = run_queries(names, sf_dir)
-    print(json.dumps({"timings": timings, "runs": runs_all}))
+    timings, runs_all, cpus = run_queries(names, sf_dir)
+    print(json.dumps({"timings": timings, "runs": runs_all, "cpus": cpus}))
 
 
 def main() -> None:
@@ -212,8 +215,9 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     runs_all: dict[str, list[float]] = {}
+    cpus = None
     if recycle <= 0:
-        timings, runs_all = run_queries(names, sf_dir)
+        timings, runs_all, cpus = run_queries(names, sf_dir)
     else:
         for seg in segments(names, recycle):
             env = dict(os.environ, **{SEGMENT_ENV: json.dumps(seg)})
@@ -232,6 +236,7 @@ def main() -> None:
             payload = json.loads(proc.stdout.strip().splitlines()[-1])
             timings.update(payload["timings"])
             runs_all.update(payload["runs"])
+            cpus = payload["cpus"]
 
     # All three timed runs per query: the in-file variance evidence
     # BASELINE.md's noise-band protocol reads when deciding whether a
@@ -256,6 +261,7 @@ def main() -> None:
         load_before,
         tuple(round(x, 2) for x in os.getloadavg()),
         jvm_recycle=recycle,
+        cpus=cpus,
     )
     print(json.dumps(summary))
 

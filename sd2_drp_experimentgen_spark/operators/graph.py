@@ -9,15 +9,18 @@ each round every node takes the minimum label in its neighborhood
 (one join + groupBy), then labels shortcut through themselves
 (label(v) <- label(label(v))), giving O(log n) rounds instead of
 O(diameter). Each round is pure DataFrame algebra over (node, label)
-and (src, dst) relations; the driver only checks the convergence
-count, never touches row data. localCheckpoint truncates the iterative
-lineage so plans stay constant-size. This is the same round structure
-as the large-star/small-star CC algorithm used at web scale.
+and (src, dst) relations, ending in one localCheckpoint that truncates
+the iterative lineage so plans stay constant-size; the convergence
+label sum is observed on that checkpoint job, so the driver never
+touches row data and runs no separate convergence scan. This is the
+same round structure as the large-star/small-star CC algorithm used at
+web scale.
 """
 
 from __future__ import annotations
 
 import os
+import time
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -271,87 +274,23 @@ def cc_labels(
     """The CONVERGED (node, label) min-label fixpoint over the J>=0.6
     near-dup graph — the dedup DECISION relation consumed by
     q_dedup_components / q_dedup_cluster_stats /
-    q_dedup_survivor_quality. r14 continuation: the registry timing
-    sweep put the trio at 6.1 / 7.7 / 6.9 s with EACH consumer
-    re-running the full pointer-jumping iteration from scratch; one
-    tracked build per (session, corpus) now serves all three — the
-    nd_pairs / bipartite_edges sharing precedent moved one level up
-    (share the fixpoint, not just the edges). The iteration itself is
-    byte-for-byte the r11-studied loop; a _telemetry probe always runs
-    a FRESH build (the scale studies count rounds, which a cache hit
-    would hide). Lifecycle/eviction: _shared_persisted —
-    release_persisted() drops it, the next consumer rebuilds, so every
-    bench/driver timed run that releases between runs still pays the
-    full iteration."""
+    q_dedup_survivor_quality. One tracked build per (session, corpus)
+    serves all three consumers (share the fixpoint, not just the
+    edges); the iteration is min_label_fixpoint, the loop
+    q_emb_dedup_pipeline runs on its embedding edges. A _telemetry
+    probe always runs a FRESH build (the scale studies count rounds,
+    which a cache hit would hide). Lifecycle/eviction:
+    _shared_persisted — release_persisted() drops it, the next
+    consumer rebuilds, so every bench/driver timed run that releases
+    between runs still pays the full iteration."""
 
     def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id")
-        pairs = nd_pairs(spark, sf_dir)
-        edges = (
-            pairs.select(
-                F.col("id_lo").alias("src"), F.col("id_hi").alias("dst")
-            )
-            .unionAll(
-                pairs.select(
-                    F.col("id_hi").alias("src"), F.col("id_lo").alias("dst")
-                )
-            )
-            .localCheckpoint()
+        docs = load_table(spark, sf_dir, "documents")
+        return min_label_fixpoint(
+            docs.select(F.col("doc_id").alias("node")),
+            nd_pairs(spark, sf_dir),
+            _telemetry,
         )
-
-        labels = docs.select(
-            F.col("doc_id").alias("node"), F.col("doc_id").alias("label")
-        ).localCheckpoint()
-
-        # Convergence check: labels are MONOTONE NON-INCREASING per
-        # node (propagate is a min over a set containing the node's
-        # own label; jumping replaces a label by the label of a
-        # smaller-or-equal node, itself <= that node by induction), so
-        # the exact integer sum of all labels strictly decreases until
-        # the fixpoint. One cheap scan-aggregate over the
-        # just-checkpointed labels replaces the r1-r10 form's
-        # per-round join+count against the previous generation — the
-        # x8 graph scale study measured that extra join as a full
-        # per-round stage at every scale (tools/graph_scale_study.py).
-        # Summed in decimal(38,0): node ids reach rep*DOC_STRIDE at
-        # study scale and 100 TB corpora push the int64 sum's
-        # headroom. Convergence-round telemetry goes to the CALLER'S
-        # dict when one is passed (_telemetry — the scale study's
-        # probe), never to module state: VERDICT r11 item 8, operators
-        # must not mutate globals per execution.
-        prev_sum = labels.agg(
-            F.sum(F.col("label").cast("decimal(38,0)"))
-        ).first()[0]
-        for rnd in range(MAX_ROUNDS):
-            if _telemetry is not None:
-                _telemetry["rounds"] = rnd + 1
-            # propagate: min label over the closed neighborhood
-            neighbor = (
-                edges.join(labels, edges.dst == labels.node)
-                .select(F.col("src").alias("node"), "label")
-            )
-            propagated = (
-                labels.unionAll(neighbor)
-                .groupBy("node")
-                .agg(F.min("label").alias("label"))
-            )
-            # pointer jumping: label(v) <- label(label(v))
-            l2 = propagated.select(
-                F.col("node").alias("jnode"), F.col("label").alias("jlabel")
-            )
-            jumped = (
-                propagated.join(l2, propagated.label == l2.jnode)
-                .select("node", F.col("jlabel").alias("label"))
-                .localCheckpoint()
-            )
-            labels = jumped
-            new_sum = labels.agg(
-                F.sum(F.col("label").cast("decimal(38,0)"))
-            ).first()[0]
-            if new_sum == prev_sum:
-                break
-            prev_sum = new_sum
-        return labels
 
     if _telemetry is not None:
         return build()
@@ -363,6 +302,94 @@ def cc_labels(
         build,
         build_checkpoints=True,
     )
+
+
+def _checkpoint_label_sum(labels: DataFrame) -> tuple[DataFrame, object]:
+    """localCheckpoint ``labels`` and return it with the exact
+    decimal(38,0) sum of its labels (None when it has no rows),
+    observed on the checkpoint job itself: no separate aggregate
+    action. The metric is read from the observed query's own
+    QueryExecution rather than through a pyspark Observation, which
+    would attach a non-serializable ObservationManager to the caller's
+    session and break later MLlib closures on it (the hazard
+    q_observe_metrics isolates with a throwaway session)."""
+    observed = labels.observe(
+        "label_sum", F.sum(F.col("label").cast("decimal(38,0)"))
+    )
+    checkpointed = observed.localCheckpoint()
+    metrics = observed._jdf.queryExecution().observedMetrics()
+    return checkpointed, metrics.apply("label_sum").get(0)
+
+
+def min_label_fixpoint(
+    nodes: DataFrame, pairs: DataFrame, _telemetry: dict | None = None
+) -> DataFrame:
+    """Connected components of the undirected graph on ``nodes``
+    (column ``node``) with edges ``pairs`` (id_lo, id_hi): the
+    localCheckpointed (node, label) relation, label = the minimum node
+    id of the node's component. Shared by cc_labels and
+    q_emb_dedup_pipeline.
+
+    Each round: propagate (min label over the closed neighborhood, one
+    join + groupBy), then pointer-jump (label(v) <- label(label(v))),
+    so rounds are O(log n), not O(diameter). The symmetric edge list is
+    checkpointed once, repartitioned on the loop's join key with no
+    partition count: AQE coalesces it by advisory bytes, so a small
+    graph runs few-partition stages and a large one keeps the shuffle
+    width its bytes need.
+
+    Convergence: labels are MONOTONE NON-INCREASING per node (the min
+    is over a set containing the node's own label; jumping replaces a
+    label by the label of a smaller-or-equal node), so the exact sum of
+    all labels strictly decreases until the fixpoint — sum unchanged
+    iff no label changed. The sum is observed on each round's
+    checkpoint job; decimal(38,0) because replica studies and 100 TB
+    corpora push an int64 sum past its headroom. An edgeless graph
+    converges after one round (None == None). Rounds, per-round walls
+    and the edge checkpoint's partition count go to the CALLER'S
+    ``_telemetry`` dict, never module state."""
+    edges = (
+        pairs.selectExpr(
+            "inline(array(named_struct('src', id_lo, 'dst', id_hi),"
+            " named_struct('src', id_hi, 'dst', id_lo)))"
+        )
+        .repartition("dst")
+        .localCheckpoint()
+    )
+    if _telemetry is not None:
+        _telemetry["edge_partitions"] = edges.rdd.getNumPartitions()
+    labels, prev_sum = _checkpoint_label_sum(
+        nodes.select("node", F.col("node").alias("label"))
+    )
+    for rnd in range(MAX_ROUNDS):
+        t0 = time.perf_counter()
+        # propagate: min label over the closed neighborhood
+        neighbor = edges.join(labels, edges.dst == labels.node).select(
+            F.col("src").alias("node"), "label"
+        )
+        propagated = (
+            labels.unionAll(neighbor)
+            .groupBy("node")
+            .agg(F.min("label").alias("label"))
+        )
+        # pointer jumping: label(v) <- label(label(v))
+        l2 = propagated.select(
+            F.col("node").alias("jnode"), F.col("label").alias("jlabel")
+        )
+        labels, new_sum = _checkpoint_label_sum(
+            propagated.join(l2, propagated.label == l2.jnode).select(
+                "node", F.col("jlabel").alias("label")
+            )
+        )
+        if _telemetry is not None:
+            _telemetry["rounds"] = rnd + 1
+            _telemetry.setdefault("round_s", []).append(
+                round(time.perf_counter() - t0, 3)
+            )
+        if new_sum == prev_sum:
+            break
+        prev_sum = new_sum
+    return labels
 
 
 # PageRank in integer micro-units. Float PageRank cannot hash-check
@@ -747,8 +774,9 @@ TRI_ID_HUB_WEDGE_CAP = 40_000_000
 #      variant measured 5.2 s vs 1.48 s (AQE re-materializes the
 #      exchange), and past broadcast size the shuffled wedge join IS
 #      the scale path.
-# Both scalars read from the one checkpointed adjacency build, which
-# the intersection then consumes — the gate adds no extra pass.
+# Both scalars come from a count-only pre-gate over the persisted
+# pairs, run before any adjacency array is built: one extra aggregate
+# pass (and job) on top of the hub-wedge gate.
 TRI_ADJ_MAX_IN_DEG = 65_536        # 512 KB max array row
 TRI_ADJ_BROADCAST_EDGES = 16_000_000  # ~128 MB broadcast of packed ids
 

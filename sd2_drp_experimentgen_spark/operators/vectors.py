@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from ..functions.helpers import r4, sql_r
 from ..plans.registry import register
 from ..sources.tables import load_table
+from .graph import min_label_fixpoint
 
 TOPK_PAIRS = 50
 
@@ -3222,7 +3223,7 @@ def q_train_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     "- 1) — SemDeDup's shape: bucket, compare-within-bucket, "
     "cluster, keep one. Shuffles carry (node, label) longs in the "
     "loop and (vec_id, sb) cells in the search; the driver sees "
-    "only the convergence count. The DuckDB oracle recomputes the "
+    "only the convergence sum. The DuckDB oracle recomputes the "
     "whole pipeline (pairs -> recursive closure -> cluster rollup), "
     "so the hash proves three composed operators at once. At "
     "100 TB every stage is the already-audited scale path: "
@@ -3234,57 +3235,12 @@ def q_emb_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("node"), "label"
     )
     pairs = q_sim_range_search(spark, sf_dir).select("id_lo", "id_hi")
-    edges = (
-        pairs.select(F.col("id_lo").alias("src"), F.col("id_hi").alias("dst"))
-        .unionAll(
-            pairs.select(
-                F.col("id_hi").alias("src"), F.col("id_lo").alias("dst")
-            )
-        )
-        .localCheckpoint()
+    comp = min_label_fixpoint(nodes.select("node"), pairs).select(
+        "node", F.col("label").alias("component_id")
     )
-    labels = nodes.select("node", F.col("node").alias("lbl")).localCheckpoint()
-    # Convergence check: monotone label-sum scan, the q_dedup_components
-    # form (r14 continuation — this loop predated that rewrite and still
-    # paid the r1–r10 per-round join+count against the previous
-    # generation, which the x8 graph scale study measured as a full
-    # extra stage EVERY round). Labels are monotone non-increasing per
-    # node (the min is over a set containing the node's own label;
-    # jumping replaces a label by the label of a smaller-or-equal node,
-    # itself <= that node by induction), so the exact integer sum over
-    # all nodes strictly decreases until the fixpoint — sum unchanged
-    # iff no label changed. decimal(38,0): replica studies push vec_id
-    # sums past int64 headroom.
-    prev_sum = labels.agg(
-        F.sum(F.col("lbl").cast("decimal(38,0)"))
-    ).first()[0]
-    for _ in range(20):
-        neighbor = edges.join(
-            labels, edges.dst == labels.node
-        ).select(F.col("src").alias("node"), "lbl")
-        propagated = (
-            labels.unionAll(neighbor)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
-        )
-        l2 = propagated.select(
-            F.col("node").alias("jnode"), F.col("lbl").alias("jlbl")
-        )
-        jumped = (
-            propagated.join(l2, propagated.lbl == l2.jnode)
-            .select("node", F.col("jlbl").alias("lbl"))
-            .localCheckpoint()
-        )
-        labels = jumped
-        new_sum = labels.agg(
-            F.sum(F.col("lbl").cast("decimal(38,0)"))
-        ).first()[0]
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
     return (
-        labels.join(nodes, "node")
-        .groupBy(F.col("lbl").alias("component_id"))
+        comp.join(nodes, "node")
+        .groupBy("component_id")
         .agg(
             F.min("label").cast("long").alias("label"),
             F.count(F.lit(1)).alias("n_vecs"),

@@ -107,6 +107,28 @@ def _load() -> None:
 # lands and commit the rewrite — never hand-edit them.
 
 # --- BEGIN GREEN-TUPLES (generated by tools/fold_greens.py) ---
+_GREEN_R15 = (
+    "q_ann_index_append", "q_ann_index_compact",
+    "q_ann_ivfpq_recall_curve", "q_ann_nprobe_choose", "q_emb_nn_descent",
+    "q_graph_triangle_count", "q_stream_ingest_neardup",
+    "q_join_asof_tolerance", "q_join_lateral_api", "q_sql_pipe_syntax",
+    "q_sql_scripting", "q_join_asof_nearest", "q_agg_hll_sketch_merge",
+    "q_agg_count_min_sketch", "q_agg_histogram_numeric",
+    "q_agg_theta_sketch_ops", "q_agg_kll_quantiles",
+    "q_text_feature_hashing", "q_pack_sequences", "q_text_pii_redact",
+    "q_text_langid_confusion", "q_corpus_upsample_epochs",
+    "q_pack_loss_mask", "q_text_html_strip", "q_sim_range_search",
+    "q_emb_pq_encode", "q_source_binaryfile", "q_ann_ivf_topk",
+    "q_stat_chi_square_cells", "q_crm_rfm_segments", "q_stat_pmi_cells",
+    "q_ml_kfold_assign", "q_dq_benford", "q_etl_incremental_auc",
+    "q_dq_drift_chisq", "q_ml_feature_scaler_fit",
+    "q_ml_quantile_binning", "q_ml_auc_rank", "q_ml_target_encoding",
+    "q_ml_confusion_threshold", "q_ml_calibration_bins",
+    "q_agg_higher_moments", "q_ml_gini_stump", "q_ml_pr_curve_points",
+    "q_ml_ks_statistic", "q_ml_lift_gains", "q_stat_spearman",
+    "q_stat_welch_ttest", "q_ml_auc_by_group", "q_ml_cost_threshold",
+)
+
 _GREEN_R14 = (
     "q_gen_randomized_plate_layout", "q_gen_doe_fractional",
     "q_ann_index_append", "q_ann_index_compact",
@@ -421,7 +443,7 @@ _GREEN_R1 = (
 
 # query -> round of its latest driver green (newest-first setdefault).
 _GREEN_ROUND: dict[str, int] = {}
-for _rnd, _names in ((14, _GREEN_R14), (13, _GREEN_R13), (12, _GREEN_R12), (11, _GREEN_R11), (10, _GREEN_R10), (9, _GREEN_R9), (8, _GREEN_R8), (7, _GREEN_R7), (6, _GREEN_R6), (5, _GREEN_R5), (4, _GREEN_R4), (3, _GREEN_R3), (2, _GREEN_R2), (1, _GREEN_R1)):
+for _rnd, _names in ((15, _GREEN_R15), (14, _GREEN_R14), (13, _GREEN_R13), (12, _GREEN_R12), (11, _GREEN_R11), (10, _GREEN_R10), (9, _GREEN_R9), (8, _GREEN_R8), (7, _GREEN_R7), (6, _GREEN_R6), (5, _GREEN_R5), (4, _GREEN_R4), (3, _GREEN_R3), (2, _GREEN_R2), (1, _GREEN_R1)):
     for _name in _names:
         _GREEN_ROUND.setdefault(_name, _rnd)
 

@@ -33,6 +33,7 @@ def test_summary_line_fits_driver_tail():
         timings, sf=0.1,
         load_before=(99.99, 99.99, 99.99),
         load_after=(99.99, 99.99, 99.99),
+        cpus=9999,
     )
     line = json.dumps(summary)
     # Leave ≥10% headroom under the measured window (~2000 B from

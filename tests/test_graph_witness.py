@@ -216,9 +216,10 @@ def test_triangle_adj_gate_falls_back_to_wedge_join(spark, monkeypatch):
 
     fn = all_specs()["q_graph_triangle_count"].fn
     base = sorted(tuple(r) for r in fn(spark, SF).collect())
+    max_in_deg = graph.TRI_ADJ_MAX_IN_DEG
     monkeypatch.setattr(graph, "TRI_ADJ_MAX_IN_DEG", 0)
     forced_wedge = sorted(tuple(r) for r in fn(spark, SF).collect())
-    monkeypatch.setattr(graph, "TRI_ADJ_MAX_IN_DEG", 65_536)
+    monkeypatch.setattr(graph, "TRI_ADJ_MAX_IN_DEG", max_in_deg)
     monkeypatch.setattr(graph, "TRI_ADJ_BROADCAST_EDGES", 0)
     forced_wedge2 = sorted(tuple(r) for r in fn(spark, SF).collect())
     release_persisted()

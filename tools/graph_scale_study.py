@@ -284,65 +284,33 @@ def run_rung(spark, name: str, sf_dir: str, runs: int = 2):
 
 
 def per_round_walls(spark, doc_dir: str, graph_dir: str) -> dict:
-    """Wall per ITERATION for the two iterative loops (VERDICT r10
-    item 5's convergence table): re-implements each loop with a timer
-    around every round, using the same plans as the operators (the
-    operators themselves stay uninstrumented — this is a study probe).
+    """Wall per ITERATION for the iterative loops (VERDICT r10 item 5's
+    convergence table). Connected components reports the shipped
+    loop's own round walls (its _telemetry); PageRank and BFS are
+    re-implemented with a timer around every round, using the same
+    plans as the operators (a study probe).
     """
     from sd2_drp_experimentgen_spark.operators.graph import (
         BFS_ROUNDS,
         BFS_SEED_MAX,
-        MAX_ROUNDS,
         PR_ITERS,
         PR_SCALE,
         PR_SUPP_OFFSET,
-    )
-    from sd2_drp_experimentgen_spark.operators.text import (
-        q_neardup_jaccard,
+        cc_labels,
     )
     from sd2_drp_experimentgen_spark.sources.tables import load_table
 
     out: dict = {}
 
-    # --- CC rounds (doc pair graph) ---
-    docs = load_table(spark, doc_dir, "documents").select("doc_id")
-    pairs = q_neardup_jaccard(spark, doc_dir).select("id_lo", "id_hi")
+    # --- CC rounds (doc pair graph): the shipped loop's own per-round
+    # walls; build_s adds the near-dup edge build before round 1 ---
+    tel: dict = {}
     t0 = time.perf_counter()
-    edges = (
-        pairs.select(F.col("id_lo").alias("src"), F.col("id_hi").alias("dst"))
-        .unionAll(
-            pairs.select(F.col("id_hi").alias("src"), F.col("id_lo").alias("dst"))
-        )
-        .localCheckpoint()
-    )
-    labels = docs.select(
-        F.col("doc_id").alias("node"), F.col("doc_id").alias("label")
-    ).localCheckpoint()
-    prev = labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).first()[0]
-    cc = {"edge_build_s": round(time.perf_counter() - t0, 2), "rounds": []}
-    for _ in range(MAX_ROUNDS):
-        t0 = time.perf_counter()
-        neighbor = edges.join(labels, edges.dst == labels.node).select(
-            F.col("src").alias("node"), "label"
-        )
-        propagated = (
-            labels.unionAll(neighbor).groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-        l2 = propagated.select(
-            F.col("node").alias("jnode"), F.col("label").alias("jlabel")
-        )
-        labels = (
-            propagated.join(l2, propagated.label == l2.jnode)
-            .select("node", F.col("jlabel").alias("label"))
-            .localCheckpoint()
-        )
-        new = labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).first()[0]
-        cc["rounds"].append(round(time.perf_counter() - t0, 2))
-        if new == prev:
-            break
-        prev = new
-    out["cc"] = cc
+    cc_labels(spark, doc_dir, _telemetry=tel)
+    out["cc"] = {
+        "build_s": round(time.perf_counter() - t0, 2),
+        "rounds": tel["round_s"],
+    }
 
     # --- bipartite edges shared by pagerank + bfs ---
     o = load_table(spark, graph_dir, "orders").select("o_orderkey", "o_custkey")
