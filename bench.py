@@ -135,20 +135,23 @@ def segments(names: list[str], size: int) -> list[list[str]]:
 
 def run_queries(
     names: list[str], sf_dir: str
-) -> tuple[dict[str, float], dict[str, list[float]], int]:
+) -> tuple[dict[str, float], dict[str, list[float]], int, int]:
     """Warm-up + min-of-3 timing for the given queries in THIS
     process's SparkSession (created on first use). Also returns the
-    session's defaultParallelism: the N of the local[N] that ran."""
+    session's defaultParallelism (the N of the local[N] that ran) and
+    the codegen compiles during the timed runs, ~0 when warm runs reuse
+    their generated classes."""
     from sd2_drp_experimentgen_spark.functions.helpers import (
         release_persisted,
     )
     from sd2_drp_experimentgen_spark.plans import all_specs
-    from sd2_drp_experimentgen_spark.session import get_spark
+    from sd2_drp_experimentgen_spark.session import codegen_compiles, get_spark
 
     spark = get_spark(app_name="sd2drp-bench", shuffle_partitions=32)
     specs = all_specs()
     timings: dict[str, float] = {}
     runs_all: dict[str, list[float]] = {}
+    warm_compiles = 0
 
     # NO forced GC anywhere in the sweep — a MEASURED decision, twice
     # (r12, when the iterative-graph tripwires brought localCheckpoint
@@ -166,6 +169,7 @@ def run_queries(
         fn = specs[name].fn
         fn(spark, sf_dir).collect()  # warm-up (JIT, file listing, broadcast)
         release_persisted()
+        compiles_before = codegen_compiles(spark)
         runs: list[float] = []
         for _ in range(3):
             t0 = time.perf_counter()
@@ -176,9 +180,11 @@ def run_queries(
             # reads and hide pipeline regressions behind the warm-up
             runs.append(round(time.perf_counter() - t0, 4))
             release_persisted()
+        warm_compiles += codegen_compiles(spark) - compiles_before
         timings[name] = min(runs)
         runs_all[name] = runs
-    return timings, runs_all, spark.sparkContext.defaultParallelism
+    cpus = spark.sparkContext.defaultParallelism
+    return timings, runs_all, cpus, warm_compiles
 
 
 SEGMENT_ENV = "SPARK_GRAFT_BENCH_SEGMENT"
@@ -187,8 +193,9 @@ SEGMENT_ENV = "SPARK_GRAFT_BENCH_SEGMENT"
 def child_main(sf_dir: str) -> None:
     """Segment subprocess: time the env-given queries, emit ONE line."""
     names = json.loads(os.environ[SEGMENT_ENV])
-    timings, runs_all, cpus = run_queries(names, sf_dir)
-    print(json.dumps({"timings": timings, "runs": runs_all, "cpus": cpus}))
+    timings, runs_all, cpus, compiles = run_queries(names, sf_dir)
+    print(json.dumps({"timings": timings, "runs": runs_all, "cpus": cpus,
+                      "warm_compiles": compiles}))
 
 
 def main() -> None:
@@ -215,9 +222,11 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     runs_all: dict[str, list[float]] = {}
+    warm_compiles: list[int] = []  # per JVM segment
     cpus = None
     if recycle <= 0:
-        timings, runs_all, cpus = run_queries(names, sf_dir)
+        timings, runs_all, cpus, compiles = run_queries(names, sf_dir)
+        warm_compiles.append(compiles)
     else:
         for seg in segments(names, recycle):
             env = dict(os.environ, **{SEGMENT_ENV: json.dumps(seg)})
@@ -237,14 +246,18 @@ def main() -> None:
             timings.update(payload["timings"])
             runs_all.update(payload["runs"])
             cpus = payload["cpus"]
+            warm_compiles.append(payload["warm_compiles"])
 
     # All three timed runs per query: the in-file variance evidence
     # BASELINE.md's noise-band protocol reads when deciding whether a
     # riser is ambient load (wide spread, uniform across queries) or a
     # plan change (tight spread at a new level). Emitted BEFORE the
     # summary so the driver's tail capture never truncates the parsed
-    # line, and mirrored to a sidecar file for post-hoc reads.
-    detail = json.dumps({"detail": "bench_runs", "runs": runs_all})
+    # line, and mirrored to a sidecar file for post-hoc reads. Each JVM
+    # segment's codegen compiles during timed runs ride along, so a
+    # thrashing generated-class cache shows here.
+    detail = json.dumps({"detail": "bench_runs", "runs": runs_all,
+                         "warm_compiles": warm_compiles})
     print(detail)
     try:
         with open(

@@ -9,6 +9,12 @@ that was not built by this factory:
   ``ts`` as TIMESTAMP(NANOS), which Spark 4.x refuses to read otherwise.
 - ``spark.sql.session.timeZone=UTC`` — hash-stable timestamp rendering.
 
+Static confs (``spark.driver.memory``,
+``spark.sql.codegen.cache.maxEntries``) take effect only when this
+factory builds the process's first session. A driver-provided foreign
+session keeps Spark's defaults for them: a static conf cannot be set at
+runtime, so ``configure_session`` does not try.
+
 Scale posture: on a real cluster the same factory applies; only
 ``master`` and the shuffle-partition count change (shuffle partitions
 should track cluster cores × 2-3 at 100 TB, or be left to AQE coalescing
@@ -70,6 +76,13 @@ def require_conf(spark: SparkSession, key: str, expected: str, why: str) -> None
     )
 
 
+def codegen_compiles(spark: SparkSession) -> int:
+    """Whole-stage-codegen classes Janino has compiled in this JVM so far
+    (a compile is a miss in the generated-class cache)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def get_spark(
     app_name: str = "sd2drp-spark",
     master: str | None = None,
@@ -101,6 +114,17 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         )
+        # Whole-stage codegen's compiled-class cache is LRU with a
+        # default of 100 entries. One pipeline pass needs more: 130
+        # distinct generated classes for the perfbench experiment_etl
+        # pass and 115 for corpus_dedup, so cycling through the same
+        # pass missed on nearly every class (~95-110 Janino compiles of
+        # ~10 ms per warm pass, plus fresh classes for the JIT to
+        # recompile). 1024 holds any single pass with ~8x headroom and
+        # keeps the cache bounded; the full 360-query registry generates
+        # 3,917 classes at sf0.01. The count depends on code shapes, not
+        # data size.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

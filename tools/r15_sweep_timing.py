@@ -4,10 +4,12 @@ Times EVERY registered query at $SPARK_GRAFT_SF_DIR (default sf0.1)
 with the noop sink (guide §1.4 — computes every column, pays no sink),
 one warm-up + min-of-2 timed runs, labelled jobs, and bench.py-style
 fresh-subprocess JVM segments so long-lived-JVM residue is bounded to
-one segment. Output: one JSON line per query on stdout plus a sorted
-summary file.
+one segment. Output: the sorted timings on stdout plus a summary file.
+Queries that raised are listed apart from the timings.
 
     python tools/r15_sweep_timing.py [--out FILE] [--segment-size N]
+
+Exits 1 when any query errored or a standing tripwire fired.
 """
 
 from __future__ import annotations
@@ -23,6 +25,28 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SEGMENT_ENV = "SPARK_GRAFT_SWEEP_SEGMENT"
 
+# Standing exit-criterion tripwires (VERDICT r14 item 8): the r14-fixed
+# hotspots must STAY fixed (min-of-2 seconds at sf0.1). Checked here so a
+# regression fails the sweep run itself, not a later verdict.
+GATES = {
+    "q_dedup_minhash_lsh": 10.0,
+    "q_udf_cogrouped": 2.0,
+    "q_text_span_dup": 3.0,
+    "q_emb_pca_power": 3.0,
+    "q_agg_approx_distinct": 3.0,
+    "q_dedup_components": 8.0,
+    "q_dedup_cluster_stats": 8.0,
+    "q_dedup_survivor_quality": 8.0,
+}
+
+
+def tripped(runs: dict[str, list[float]]) -> dict[str, float]:
+    """Gated queries whose best timed run exceeds their cap."""
+    return {
+        n: min(runs[n]) for n, cap in GATES.items()
+        if n in runs and min(runs[n]) > cap
+    }
+
 
 def child_main(sf_dir: str) -> None:
     from sd2_drp_experimentgen_spark.functions.helpers import (
@@ -34,10 +58,11 @@ def child_main(sf_dir: str) -> None:
     names = json.loads(os.environ[SEGMENT_ENV])
     spark = get_spark(app_name="r15-sweep", shuffle_partitions=32)
     specs = all_specs()
-    out = {}
+    out: dict[str, list[float]] = {}
+    errors: dict[str, str] = {}
     for name in names:
-        fn = specs[name].fn
         try:
+            fn = specs[name].fn
             spark.sparkContext.setJobDescription(f"{name}: warm-up")
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             release_persisted()
@@ -52,9 +77,9 @@ def child_main(sf_dir: str) -> None:
                 release_persisted()
             out[name] = runs
         except Exception as exc:  # noqa: BLE001 — sweep must finish
-            out[name] = [-1.0, -1.0]
+            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             sys.stderr.write(f"{name}: ERROR {exc}\n")
-    print(json.dumps(out))
+    print(json.dumps({"runs": out, "errors": errors}))
 
 
 def main() -> None:
@@ -73,6 +98,7 @@ def main() -> None:
 
     names = args.names or sorted(all_specs())
     all_runs: dict[str, list[float]] = {}
+    errors: dict[str, str] = {}
     t_start = time.time()
     for i in range(0, len(names), args.segment_size):
         seg = names[i : i + args.segment_size]
@@ -87,7 +113,8 @@ def main() -> None:
             sys.stderr.write(proc.stderr[-4000:])
             raise SystemExit(f"segment {seg[0]}.. failed")
         payload = json.loads(proc.stdout.strip().splitlines()[-1])
-        all_runs.update(payload)
+        all_runs.update(payload["runs"])
+        errors.update(payload["errors"])
         done = min(i + args.segment_size, len(names))
         print(
             f"[{done}/{len(names)}] {time.time() - t_start:.0f}s "
@@ -105,30 +132,11 @@ def main() -> None:
                 "protocol": "noop sink, 1 warm-up + min-of-2, "
                 f"jvm segment {args.segment_size}",
                 "runs": all_runs,
+                "errors": errors,
             },
             f,
             indent=1,
         )
-    # Standing exit-criterion tripwires (VERDICT r14 item 8): the six
-    # r14-fixed hotspots must STAY fixed. Asserted here so a regression
-    # fails the sweep run itself, not a later verdict.
-    gates = {
-        "q_dedup_minhash_lsh": 10.0,
-        "q_udf_cogrouped": 2.0,
-        "q_text_span_dup": 3.0,
-        "q_emb_pca_power": 3.0,
-        "q_agg_approx_distinct": 3.0,
-        "q_dedup_components": 8.0,
-        "q_dedup_cluster_stats": 8.0,
-        "q_dedup_survivor_quality": 8.0,
-    }
-    tripped = {
-        n: min(all_runs[n])
-        for n, cap in gates.items()
-        if n in all_runs and min(all_runs[n]) > cap
-    }
-    if tripped:
-        print(f"TRIPWIRE: r14-fixed hotspots regressed: {tripped}")
     # Known-hot annotations (VERDICT r14 item 5-minor): entries here are
     # PRICED, not unoptimized -- do not re-investigate without new data.
     #   q_try_functions ~1.5-2 s: single task because sf0.1 orders is one
@@ -143,6 +151,13 @@ def main() -> None:
     print("top 25 by min-of-2:")
     for name, runs in ranked[:25]:
         print(f"  {min(runs):7.3f}  {name}  {runs}")
+    for name, why in sorted(errors.items()):
+        print(f"ERROR: {name}: {why}")
+    regressed = tripped(all_runs)
+    if regressed:
+        print(f"TRIPWIRE: r14-fixed hotspots regressed: {regressed}")
+    if errors or regressed:
+        raise SystemExit(1)
 
 
 if __name__ == "__main__":
