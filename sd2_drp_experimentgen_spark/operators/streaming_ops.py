@@ -575,7 +575,7 @@ def q_stream_sink_python_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
         committed_stream_files,
         use_python_datasource,
     )
-    from ..streaming.jobs import _events_file_schema, _unique_name
+    from ..streaming.jobs import _file_schema, _unique_name
     from ..sources.tables import normalize_events_ts
 
     sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
@@ -597,7 +597,7 @@ def q_stream_sink_python_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = spark
     use_python_datasource(s, StreamFileSinkDataSource)
     raw = (
-        s.readStream.schema(_events_file_schema(s, src))
+        s.readStream.schema(_file_schema(s, src))
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
@@ -670,7 +670,7 @@ def _documents_dir(sf_dir: str) -> str:
 def q_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _documents_dir(sf_dir)
     s = jobs._stream_session(spark)
-    schema = s.read.parquet(d).schema
+    schema = jobs._file_schema(s, d)
     raw = s.readStream.schema(schema).parquet(d)
     deduped = raw.select(
         "lang", F.md5(F.col("text").cast("binary")).alias("h")
@@ -720,7 +720,7 @@ def q_stream_ingest_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _documents_dir(sf_dir)
     s = jobs._stream_session(spark)
-    schema = s.read.parquet(d).schema
+    schema = jobs._file_schema(s, d)
     raw = s.readStream.schema(schema).parquet(d)
     bands = _band_frame(_minhash_signatures(raw))
     uniq = bands.dropDuplicates(["band_idx", "band_sig"])
@@ -794,7 +794,7 @@ def q_stream_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _embeddings_dir(sf_dir)
     s = jobs._stream_session(spark)
-    schema = s.read.parquet(d).schema
+    schema = jobs._file_schema(s, d)
     raw = s.readStream.schema(schema).parquet(d).select(
         "vec_id", "embedding"
     )
@@ -868,7 +868,7 @@ def q_stream_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _documents_dir(sf_dir)
     s = jobs._stream_session(spark)
-    schema = s.read.parquet(d).schema
+    schema = jobs._file_schema(s, d)
     raw = s.readStream.schema(schema).parquet(d)
     hist = (
         raw.select(

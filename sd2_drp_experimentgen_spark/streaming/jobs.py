@@ -18,6 +18,7 @@ advances; without it state grows unboundedly.
 from __future__ import annotations
 
 import itertools
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,16 +32,18 @@ from ..sources.tables import normalize_events_ts
 _SCHEMA_CACHE: dict[str, StructType] = {}
 
 
-def _events_file_schema(spark: SparkSession, path: str) -> StructType:
-    """Raw schema of the events files at ``path``, read from parquet
-    footers via a batch scan (metadata-only — no data IO). readStream
-    needs an explicit schema; deriving it from the files themselves
-    keeps streaming correct across fixture regenerations that change
-    the physical ts encoding (VERDICT r3 P0).
+def _file_schema(spark: SparkSession, path: str) -> StructType:
+    """Raw schema of the parquet files at ``path`` (events, documents,
+    embeddings), read from their footers via a batch scan (metadata
+    only, but still one Spark job). readStream needs an explicit schema;
+    deriving it from the files themselves keeps streaming correct
+    across fixture regenerations that change the physical ts encoding
+    (VERDICT r3 P0).
 
     Cached per path: multi-phase jobs (late-data, foreachBatch) re-read
-    the same directory as files are appended, and appended files share
-    the first file's generation within a process."""
+    the same directory as files are appended, repeated runs of a
+    standing query re-read the same staged copy, and appended files
+    share the first file's generation within a process."""
     if path not in _SCHEMA_CACHE:
         _SCHEMA_CACHE[path] = spark.read.parquet(path).schema
     return _SCHEMA_CACHE[path]
@@ -50,6 +53,35 @@ _run_counter = itertools.count()
 
 def _unique_name(prefix: str) -> str:
     return f"{prefix}_{next(_run_counter)}"
+
+
+# Spark's default checkpoint manager renames through Hadoop's FileContext.
+# On a local disk without the native libhadoop, FileContext forks
+# `readlink` for each link-status check around a rename: one warm
+# q_stream_ingest_neardup run forked 320 `readlink` (plus 107 `chmod`
+# that Hadoop forks for each file it creates, which no conf avoids), and
+# its state-store tasks mostly waited on them. The FileSystem manager
+# renames with FileSystem.rename, which on a local disk is rename(2):
+# atomic, no fork. It tests for an existing destination before the
+# rename instead of failing the rename itself, which only two concurrent
+# writers of one checkpoint could tell apart.
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _local_checkpoints(root: str | None, default_fs: str) -> bool:
+    """Whether a session's streaming checkpoints land on the local file
+    system: its checkpoint root is unset (Spark's temp dir) or a bare
+    path, and those resolve against ``default_fs``, or the root is a
+    ``file:`` URI. The engine's own per-query checkpoints are bare
+    paths, so ``default_fs`` must be ``file:`` too. HDFS and object
+    stores keep Spark's default manager: they do not fork, and on them
+    the manager choice is a question of rename semantics, not speed."""
+    default_scheme = urlparse(default_fs).scheme or "file"
+    root_scheme = urlparse(root or "").scheme or default_scheme
+    return default_scheme == root_scheme == "file"
 
 
 def _stream_session(spark: SparkSession) -> SparkSession:
@@ -63,6 +95,15 @@ def _stream_session(spark: SparkSession) -> SparkSession:
     s.conf.set(
         "spark.sql.shuffle.partitions", str(_STREAM_SHUFFLE_PARTITIONS)
     )
+    default_fs = s.sparkContext._jsc.hadoopConfiguration().get(
+        "fs.defaultFS", "file:///"
+    )
+    root = s.conf.get("spark.sql.streaming.checkpointLocation", None)
+    if _local_checkpoints(root, default_fs):
+        s.conf.set(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            _FS_CHECKPOINT_MANAGER,
+        )
     return s
 
 
@@ -76,7 +117,7 @@ def stream_events(spark: SparkSession, path: str) -> DataFrame:
     trigger size matched to the arrival rate.
     """
     spark = _stream_session(spark)
-    schema = _events_file_schema(spark, path)
+    schema = _file_schema(spark, path)
     raw = spark.readStream.schema(schema).parquet(path)
     return normalize_events_ts(raw)
 
@@ -415,7 +456,7 @@ def foreachbatch_upsert_counts(
 
     spark = _stream_session(spark)
     raw = (
-        spark.readStream.schema(_events_file_schema(spark, events_path))
+        spark.readStream.schema(_file_schema(spark, events_path))
         .option("maxFilesPerTrigger", 1)
         .parquet(events_path)
     )
@@ -601,7 +642,7 @@ def tws_user_totals(spark: SparkSession, events_path: str) -> DataFrame:
     # ValueState genuinely carries across batches (the single-batch path
     # would never read state back).
     raw = (
-        spark.readStream.schema(_events_file_schema(spark, events_path))
+        spark.readStream.schema(_file_schema(spark, events_path))
         .option("maxFilesPerTrigger", 1)
         .parquet(events_path)
     )

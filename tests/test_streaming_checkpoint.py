@@ -11,8 +11,9 @@ import shutil
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
-from tests.conftest import SF_T2
+from tests.conftest import SF_T1, SF_T2
 
 
 def test_checkpoint_restart_resume(spark, tmp_path):
@@ -126,3 +127,52 @@ def test_stream_static_join_equals_batch(spark):
         ).fetchall()
     }
     assert got == want
+
+
+def test_stream_session_uses_filesystem_checkpoint_manager(spark):
+    """Streaming sessions on a local checkpoint root rename through
+    FileSystem.rename (rename(2), no fork) instead of FileContext, which
+    forks `readlink` per status check when libhadoop is missing."""
+    from sd2_drp_experimentgen_spark.streaming import jobs
+
+    s = jobs._stream_session(spark)
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert s.conf.get(key, None) == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+
+@pytest.mark.parametrize(
+    "root, default_fs, local",
+    [
+        (None, "file:///", True),
+        ("file:/tmp/ckpt", "file:///", True),
+        ("/tmp/ckpt", "file:///", True),
+        (None, "hdfs://nn:8020", False),
+        ("/tmp/ckpt", "hdfs://nn:8020", False),
+        ("hdfs://nn/ckpt", "file:///", False),
+        ("s3a://b/ckpt", "file:///", False),
+    ],
+)
+def test_checkpoint_manager_only_on_local_roots(root, default_fs, local):
+    from sd2_drp_experimentgen_spark.streaming import jobs
+
+    assert jobs._local_checkpoints(root, default_fs) is local
+
+
+def test_neardup_rerun_starts_one_job(spark):
+    """A repeated run of the near-dup stream starts only its micro-batch
+    job: the source schema comes from the per-path cache, not from a
+    footer-scan job on every run."""
+    from sd2_drp_experimentgen_spark.plans import all_specs
+
+    q = all_specs()["q_stream_ingest_neardup"].fn
+    q(spark, SF_T1)
+    sc = spark.sparkContext
+    first = sc._jsc.sc().dagScheduler().numTotalJobs()
+    q(spark, SF_T1)
+    end = sc._jsc.sc().dagScheduler().numTotalJobs()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = [sc.statusTracker().getJobInfo(j) for j in range(first, end)]
+    assert [j.status for j in jobs] == ["SUCCEEDED"]
