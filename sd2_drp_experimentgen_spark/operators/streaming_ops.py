@@ -575,7 +575,7 @@ def q_stream_sink_python_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
         committed_stream_files,
         use_python_datasource,
     )
-    from ..streaming.jobs import _file_schema, _unique_name
+    from ..streaming.jobs import _file_schema, _stream_session, _unique_name
     from ..sources.tables import normalize_events_ts
 
     sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
@@ -589,12 +589,7 @@ def q_stream_sink_python_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq.write_table(table.slice(0, half), os.path.join(src, "0_first.parquet"))
     pq.write_table(table.slice(half), os.path.join(src, "1_second.parquet"))
 
-    # NOT _stream_session: the r-era ClassNotFoundException here was the
-    # active-session lookup gap now closed by use_python_datasource
-    # (Spark resolves Python data-source names through the thread-local
-    # ACTIVE session, see sources/pyds.py) — and this query has no
-    # stateful shuffle to tune anyway, so the base session is right.
-    s = spark
+    s = _stream_session(spark)
     use_python_datasource(s, StreamFileSinkDataSource)
     raw = (
         s.readStream.schema(_file_schema(s, src))

@@ -1,1 +1,1 @@
-from .registry import QuerySpec, all_specs, get_spec, register  # noqa: F401
+from .registry import QuerySpec, all_specs, register  # noqa: F401

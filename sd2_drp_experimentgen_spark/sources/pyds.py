@@ -43,28 +43,19 @@ def use_python_datasource(spark: SparkSession, *sources: type) -> None:
     fresh clone, and saving (tests/test_sources.py guards this).
     Pinning the active session to the session that owns the
     registration makes every call site order-independent.
+
+    The pin comes FIRST: ``register`` looks for an existing source
+    through the active session too, so registering on a second clone
+    while the first clone is still active raises
+    DATA_SOURCE_ALREADY_EXISTS. Re-registering on the pinned session
+    itself just replaces the source.
     """
+    spark._jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession(  # noqa: SLF001
+        spark._jsparkSession  # noqa: SLF001
+    )
     for src in sources:
-        try:
-            spark.dataSource.register(src)
-        except Exception:  # noqa: BLE001
-            pass  # already registered in this session
-    try:
-        jvm = spark._jvm  # noqa: SLF001
-        jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession(
-            spark._jsparkSession  # noqa: SLF001
-        )
-    except Exception:  # noqa: BLE001
-        # Pre-4.x layouts keep the companion on sql.SparkSession; if
-        # neither is reachable the call sites degrade to the old
-        # register-only behavior (correct whenever the caller's
-        # session is already the active one).
-        try:
-            jvm.org.apache.spark.sql.SparkSession.setActiveSession(
-                spark._jsparkSession  # noqa: SLF001
-            )
-        except Exception:  # noqa: BLE001
-            pass
+        spark.dataSource.register(src)
+
 
 # Integer generation constants (Knuth multiplicative hash for spread);
 # all arithmetic stays far below int64 range for cross-engine parity.

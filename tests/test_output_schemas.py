@@ -1,5 +1,4 @@
-"""Driver-compatibility guards (VERDICT r2 items 3-4) and registry
-priority-set consistency (ADVICE r2, registry.py:92).
+"""Driver-compatibility guards (VERDICT r2 items 3-4).
 
 Round 2's single red driver row (q_agg_collect_sets) was caused by an
 array-typed OUTPUT column: the driver's pandas canonicalizer
@@ -16,11 +15,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from sd2_drp_experimentgen_spark.plans import all_specs
-from sd2_drp_experimentgen_spark.plans.registry import (
-    _DRIVER_VERIFIED,
-    _NEW_THIS_ROUND,
-    _PRIORITY_BOOST,
-)
 from tests.conftest import SF_T1
 from tools.verify_local import NonScalarCell, canon_rows, compare, container_cols
 
@@ -81,89 +75,3 @@ class _FakeDuck:
     def fetchall():
         return []
 
-
-def test_priority_sets_subset_of_registry():
-    """ADVICE r2: hand-maintained priority name sets must be subsets of
-    the registry — a rename or typo must fail loudly, not silently
-    demote a query's verify priority."""
-    names = set(all_specs())
-    stray = (_DRIVER_VERIFIED | _NEW_THIS_ROUND | set(_PRIORITY_BOOST)) - names
-    assert not stray, f"priority-set names not in registry: {stray}"
-    # Overlap between boost and verified is now LEGAL and intentional:
-    # _DRIVER_VERIFIED records driver history, while the r4 boost list
-    # re-proves events-dependent greens invalidated by the r3 fixture
-    # regeneration. Boost must win the priority comparison for those.
-    from sd2_drp_experimentgen_spark.plans.registry import _driver_priority
-
-    for name in set(_PRIORITY_BOOST) & _DRIVER_VERIFIED:
-        tier, _ = _driver_priority((name, all_specs()[name]))
-        assert tier == 0, f"{name}: boost must outrank verified"
-
-
-def test_boost_queries_sort_first():
-    """all_specs() iteration must begin with the boost list, in order —
-    the driver verifies the first 50, so ordering IS the sampling plan.
-    ADVICE r9 low: with _PRIORITY_BOOST empty the prefix check is
-    vacuous ([:0] == []), so assert the empty state EXPLICITLY — the
-    override tier being empty is itself part of the r10+ sampling plan
-    (pure rotation); anyone re-populating the boost list flips to the
-    prefix assertion automatically."""
-    if not _PRIORITY_BOOST:
-        # Empty is the declared r10 state: no query may claim tier 0.
-        from sd2_drp_experimentgen_spark.plans.registry import (
-            _driver_priority,
-        )
-
-        tiers = {_driver_priority(item)[0] for item in all_specs().items()}
-        assert 0 not in tiers, "tier-0 (boost) rank with an empty boost list"
-    else:
-        first = list(all_specs())[: len(_PRIORITY_BOOST)]
-        assert first == list(_PRIORITY_BOOST)
-
-
-def test_r9_window_is_new_then_reboost_then_oldest_greens():
-    """The round-9+ sampling plan (VERDICT r8 items 1+4): with the
-    never-sampled backlog drained, the 50-slot window is this round's
-    never-sampled additions (_NEW_THIS_ROUND), then the _REBOOST
-    queue (stale greens whose plans were rewritten) IN FULL — new
-    operators must never push a re-boost entry out of the window —
-    then the freshness rotation: already-verified queries ordered
-    oldest driver green first, so no green row ages indefinitely."""
-    from sd2_drp_experimentgen_spark.plans.registry import (
-        _GREEN_ROUND,
-        _REBOOST,
-    )
-
-    from sd2_drp_experimentgen_spark.plans.registry import ENV_GATED
-
-    # In an environment with the optional deps installed, an env-gated
-    # query registers as never-sampled and legitimately outranks the
-    # whole plan (tier 1) — exclude it so the assertion holds in both
-    # environments.
-    window = [n for n in all_specs() if n not in ENV_GATED][:50]
-    n_new = len(_NEW_THIS_ROUND)
-    assert len(_REBOOST) + n_new <= 50, "re-boost entry pushed out of window"
-    assert set(window[:n_new]) == set(_NEW_THIS_ROUND)
-    assert window[n_new : n_new + len(_REBOOST)] == list(_REBOOST)
-    ages = [_GREEN_ROUND[n] for n in window[n_new + len(_REBOOST):]]
-    # rotation slots must be monotonically non-decreasing in green age
-    # (oldest first) and start at the oldest cohort present
-    assert ages == sorted(ages)
-    assert ages[0] == min(_GREEN_ROUND.values())
-
-
-def test_green_round_covers_registry():
-    """Every registered query has a driver row after the r8 drain:
-    _GREEN_ROUND (driver history as data) must cover the registry
-    exactly — a new query must ride _NEW_THIS_ROUND, not slip in
-    unsampled; a rename must fail loudly here. Env-gated queries are
-    exempt: they only register when their optional dep is installed,
-    and the driver env (like this one) lacks it."""
-    from sd2_drp_experimentgen_spark.plans.registry import (
-        ENV_GATED,
-        _GREEN_ROUND,
-    )
-
-    names = set(all_specs())
-    unsampled = names - set(_GREEN_ROUND) - _NEW_THIS_ROUND - ENV_GATED
-    assert not unsampled, f"registered but never driver-sampled: {unsampled}"

@@ -234,6 +234,34 @@ def test_pyds_lookup_survives_foreign_active_session(spark, tmp_path):
         )
 
 
+def test_pyds_registers_on_successive_stream_sessions(spark):
+    """Each streaming run takes a fresh _stream_session clone. Registering
+    on the second clone while the first was still the active session
+    used to fail, so a second q_stream_python_source run in one session
+    raised DATA_SOURCE_NOT_FOUND. Two clones in a row must each resolve
+    the source (no stream is started)."""
+    from sd2_drp_experimentgen_spark.sources.pyds import (
+        SensorStreamDataSource,
+        use_python_datasource,
+    )
+    from sd2_drp_experimentgen_spark.streaming.jobs import _stream_session
+
+    try:
+        for _ in range(2):
+            clone = _stream_session(spark)
+            use_python_datasource(clone, SensorStreamDataSource)
+            df = (
+                clone.readStream.format("sd2drp_sensor_stream")
+                .option("rows", 10)
+                .load()
+            )
+            assert df.isStreaming
+    finally:
+        spark._jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession(
+            spark._jsparkSession
+        )
+
+
 def test_foreachbatch_state_swap_recovers_from_crash(spark, tmp_path):
     """ADVICE r2 (jobs.py:314): at every instant one of state/state_old
     holds a committed table. Simulate a crash between the two renames

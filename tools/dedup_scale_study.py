@@ -421,8 +421,7 @@ def run_lsh_curve(spark, reps: list[int]) -> int:
     pairs/candidates exactly linear (replicas share zero shingles),
     drops 0 at every rung (organic buckets stay far under
     LSH_BUCKET_CAP=64) — a nonzero drop or super-linear candidate
-    count here is a blocking defect, fix + _REBOOST per the verdict's
-    'done' criterion."""
+    count here is a blocking defect."""
     from sd2_drp_experimentgen_spark.functions.helpers import (
         release_persisted,
     )

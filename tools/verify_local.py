@@ -198,16 +198,6 @@ def compare(name, spark_df, duck_rel) -> tuple[bool, str]:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    ap.add_argument(
-        "--driver-window",
-        type=int,
-        nargs="?",
-        const=50,
-        default=None,
-        metavar="N",
-        help="verify exactly the first N queries in all_specs() priority "
-        "order (default 50) — the sample the driver will take next round",
-    )
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
@@ -224,10 +214,7 @@ def main() -> int:
     fp0 = fixture_fingerprint(args.sf_dir)
 
     specs = all_specs()
-    if args.driver_window:
-        names = list(specs)[: args.driver_window]  # priority order
-    else:
-        names = args.names or sorted(specs)
+    names = args.names or sorted(specs)
     spark = get_spark(shuffle_partitions=8)
     con = duck_connect(args.sf_dir)
 
