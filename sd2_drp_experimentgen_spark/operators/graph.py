@@ -738,58 +738,36 @@ def q_dedup_survivor_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Hub budget for the id-oriented triangle form: the MAX single-node
-# wedge count C(out_deg, 2) the id orientation may enumerate before
-# the plan switches to degree orientation (same triangles, same
-# per-node counts; a hub's fan-out becomes C(forward_degree, 2) in
-# the (deg, id) total order, ~0 for the hottest node). CONCENTRATION
-# is the right signal, not total volume: the r11 x64 study pushed
-# 1.35G TOTAL wedges through the id form in 96 s because they spread
-# over 354k nodes, while the r12 skew probe (tools/
-# triangle_skew_probe.py, SCALE.md round 12) showed ONE low-id hub
-# stalling a single task — measured crossover on 200k-node/600k-edge
-# lattice corpora: hub C(H,2) = 9.0M wedges -> id 1.34 s vs deg
-# 5.11 s (id wins, degree join overhead dominates); 134.8M -> id
-# 12.83 s vs deg 5.29 s (deg wins). Linear model walls cross at
-# ~47M single-node wedges; cap set just under. The fixture pair
-# graph (max out-degree <= 221, <= 24k wedges/node at every studied
-# replica scale — replicas never interconnect) stays on the
-# measured-best id path everywhere.
-TRI_ID_HUB_WEDGE_CAP = 40_000_000
-
-# r15 adjacency-intersection gate (guide §1.2 — fix the algorithm
-# before the per-task work): on hub-free graphs the id-oriented wedge
-# join still MATERIALIZES every wedge as a row (21M at sf0.1) and
-# hash-probes each against the edge set; intersecting the two
-# endpoints' sorted in-below adjacency arrays per EDGE does the same
-# counting with zero wedge rows (interleaved A/B on the fixture:
-# 2.13 -> 1.48 s min-of-4, all-runs spread 1.48-1.66 vs 2.13-3.54;
-# bit-identity pytest-forced). The form is only safe when
-#  (a) the largest in-below adjacency array is bounded — an
-#      in-degree hub (a star toward one high id) passes the
-#      OUT-degree wedge gate with ~0 wedges but would carry an
-#      |E|-long array once per incident edge, a quadratic blowup the
-#      wedge join does not have; and
-#  (b) the adjacency table fits a broadcast — the no-hint plain-join
-#      variant measured 5.2 s vs 1.48 s (AQE re-materializes the
-#      exchange), and past broadcast size the shuffled wedge join IS
-#      the scale path.
-# Both scalars come from a count-only pre-gate over the persisted
-# pairs, run before any adjacency array is built: one extra aggregate
-# pass (and job) on top of the hub-wedge gate.
-TRI_ADJ_MAX_IN_DEG = 65_536        # 512 KB max array row
-TRI_ADJ_BROADCAST_EDGES = 16_000_000  # ~128 MB broadcast of packed ids
+# Triangle work budget c. Per edge (x, y) the kernel intersects out(x)
+# and out(y), so the total work is Σ_v deg(v)·|out(v)|. The gate keeps
+# the id order while Σ |out(v)|² <= c·|E|: then no out-list is longer
+# than √(c·|E|), and the total work stays under |E|·(c + √(c·|E|)).
+# Past the budget the degree order caps every out-list at √(2|E|)
+# (total work under 2|E|·√(2|E|)), at the price of a degree join the
+# id order does not pay. Measured on 4 cores, local[4] (SCALE.md,
+# last section; tools/triangle_skew_probe.py): the sf0.1 near-dup pair
+# graph reads Σout²/|E| = 120 and runs 4.7 s in id order against 6.9 s
+# in degree order; a low-id hub of 16,384 edges over a 600k-edge
+# lattice reads 438, where degree order is already ahead (4.8 s
+# against 5.1 s) and the id order's hub work grows as the square of
+# its degree.
+TRI_WORK_PER_EDGE = 256
+# Broadcast bound on |E| for the out-list table. One broadcast serves
+# both joins (ReusedExchange). Its hashed relation measured ~12 bytes
+# per edge at sf0.1 (4.0 MiB for 353,929 edges in 4,322 lists) and
+# ~31 on a 3-out lattice (17.5 MiB for 599,990 edges in 199,999
+# lists), so 8M edges stay near 100 MB on pair-graph lists and under
+# 256 MB on the shortest measured ones. Past it both joins shuffle.
+TRI_ADJ_BROADCAST_EDGES = 8_000_000
 
 
 def degree_oriented_edges(e: DataFrame) -> DataFrame:
-    """(src, dst, ddst): each undirected (id_lo, id_hi) edge oriented
-    from the lower to the higher endpoint in the (degree, id) total
-    order, carrying the destination's degree for downstream order
-    comparisons. THE single definition of the degree orientation —
-    the operator's wedge join and tools/triangle_skew_probe.py's
-    wedge-volume accounting both consume it, so the probe that sets
-    TRI_ID_HUB_WEDGE_CAP can never measure a different orientation
-    than the one that ships (r12 review)."""
+    """(src, dst): each undirected (id_lo, id_hi) edge oriented from
+    the lower to the higher endpoint in the (degree, id) total order.
+    A node's out-list then holds only neighbours of at least its own
+    degree, so no out-list is longer than √(2|E|): the order
+    triangle_counts switches to when the id order's out-lists are too
+    skewed."""
     deg = (
         e.select(F.col("id_lo").alias("v"))
         .unionAll(e.select(F.col("id_hi").alias("v")))
@@ -809,50 +787,72 @@ def degree_oriented_edges(e: DataFrame) -> DataFrame:
     return el.select(
         F.when(lo_first, F.col("id_lo")).otherwise(F.col("id_hi")).alias("src"),
         F.when(lo_first, F.col("id_hi")).otherwise(F.col("id_lo")).alias("dst"),
-        F.when(lo_first, F.col("dhi")).otherwise(F.col("dlo")).alias("ddst"),
     )
 
 
-def _tri_counts_degree_oriented(e: DataFrame) -> DataFrame:
-    """Per-node triangle counts via DEGREE-oriented wedge join — the
-    standard web-scale skew guard: every edge orients toward the
-    higher (degree, id) endpoint (degree_oriented_edges), so each
-    node's wedge fan-out is C(forward_degree, 2) and a hub (highest
-    order) has forward degree ~0 instead of ~deg(hub). Produces
-    exactly the same triangles as the id-oriented form (any total
-    order counts each triangle once from its smallest corner), hence
-    bit-identical per-node counts — pytest forces this path on the
-    fixture corpus and asserts equality."""
-    d = degree_oriented_edges(e)
-    # Wedge (a; b, c) with order(b) < order(c): carried ddst columns
-    # compare (deg, id) without packing into one integer (doc ids at
-    # study scale would overflow a composite).
-    w = (
-        d.alias("d1")
-        .join(d.alias("d2"), F.col("d2.src") == F.col("d1.src"))
-        .where(
-            (F.col("d1.ddst") < F.col("d2.ddst"))
-            | (
-                (F.col("d1.ddst") == F.col("d2.ddst"))
-                & (F.col("d1.dst") < F.col("d2.dst"))
-            )
-        )
+def triangle_work_ratio(e: DataFrame) -> tuple[float, int]:
+    """(Σ |out(v)|² / |E|, |E|) over the id-ordered out-degrees of the
+    undirected pairs ``e``: the one count-only gate aggregate of
+    triangle_counts, run before any adjacency array exists."""
+    st = (
+        e.groupBy("id_lo")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.sum(F.col("n") * F.col("n")).alias("w"), F.sum("n").alias("ne"))
+        .first()
+    )
+    n_edges = st["ne"] or 0
+    return (st["w"] or 0) / max(n_edges, 1), n_edges
+
+
+def triangle_counts(
+    e: DataFrame,
+    work_per_edge: float = TRI_WORK_PER_EDGE,
+    broadcast_edges: int = TRI_ADJ_BROADCAST_EDGES,
+) -> DataFrame:
+    """Per-node triangle counts (doc_id, n_triangles) over the
+    undirected pairs ``e`` (id_lo < id_hi), by per-edge adjacency
+    intersection. Under a total order let out(v) be v's neighbours
+    that come after v. A triangle is counted exactly once: at the edge
+    joining its two earliest corners, whose out-lists both hold the
+    third corner. The order is id order while triangle_work_ratio is
+    at most ``work_per_edge``, else (degree, id) order (see
+    TRI_WORK_PER_EDGE). The out-lists are grouped once and
+    checkpointed, then joined to every edge on both endpoints. Each
+    edge's corners explode as one concat (the third corners, b×|∩|,
+    c×|∩|): 3·T rows for T triangles."""
+    ratio, n_edges = triangle_work_ratio(e)
+    fwd = (
+        degree_oriented_edges(e)
+        if ratio > work_per_edge
+        else e.select(F.col("id_lo").alias("src"), F.col("id_hi").alias("dst"))
+    )
+    adj = (
+        fwd.groupBy("src")
+        .agg(F.collect_list("dst").alias("nbrs"))
+        .localCheckpoint()
+    )
+    if n_edges <= broadcast_edges:
+        adj = F.broadcast(adj)
+    x, y = adj.alias("x"), adj.alias("y")
+    cs = (
+        e.join(x, F.col("id_lo") == F.col("x.src"))
+        .join(y, F.col("id_hi") == F.col("y.src"))
         .select(
-            F.col("d1.src").alias("a"),
-            F.col("d1.dst").alias("b"),
-            F.col("d2.dst").alias("c"),
+            F.col("id_lo").alias("b"),
+            F.col("id_hi").alias("c"),
+            F.array_intersect("x.nbrs", "y.nbrs").alias("cs"),
         )
     )
-    # Close: the (b, c) edge is oriented b -> c by construction
-    # (order(b) < order(c)), so one equi-join against d suffices.
-    tri = w.join(
-        d.alias("d3"),
-        (F.col("d3.src") == F.col("b")) & (F.col("d3.dst") == F.col("c")),
-    ).select("a", "b", "c")
-    return (
-        tri.select(F.explode(F.array("a", "b", "c")).alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
+    corners = cs.where(F.size("cs") > 0).select(
+        F.explode(
+            F.expr(
+                "concat(cs, array_repeat(b, size(cs)), "
+                "array_repeat(c, size(cs)))"
+            )
+        ).alias("doc_id")
+    )
+    return corners.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_triangles")
     )
 
 
@@ -880,169 +880,23 @@ def _tri_counts_degree_oriented(e: DataFrame) -> DataFrame:
     "duplicate CLUSTER is near-clique (many triangles), while a "
     "chain of borderline pairs has none, so per-document triangle "
     "participation separates solid dup groups from transitive-"
-    "closure accidents before any survivor decision. Algorithm is "
-    "the MPC-standard oriented wedge join: edges are kept once in "
-    "id order (id_lo < id_hi), wedges (a<b, a<c, b<c) form by one "
-    "self-join on the lower endpoint, and one more join against the "
-    "edge set closes them — every triangle is counted exactly once "
-    "with no direction explosion. Per-node counts come from "
-    "exploding each triangle's three corners into a groupBy. Skew "
-    "guard (r12, measured): a scalar pre-aggregate finds the hottest "
-    "node's wedge count max C(out_deg, 2); past TRI_ID_HUB_WEDGE_CAP "
-    "the plan switches to DEGREE orientation "
-    "(_tri_counts_degree_oriented — orient toward the higher "
-    "(degree, id) endpoint, hub fan-out ~0, bit-identical counts, "
-    "pytest-forced). The r12 probe (tools/triangle_skew_probe.py) "
-    "put the crossover at ~47M single-node wedges on this box: a "
-    "C(4096,2)=9M hub still ran the id form 3.8x FASTER than the "
-    "degree form's extra degree join (1.34 s vs 5.11 s), while a "
-    "C(16384,2)=135M hub flipped it (12.83 s vs 5.29 s). This "
-    "corpus (r11 study, sf0.1: 354k edges, max degree 221, <=24k "
-    "wedges per node at every replica scale) sits below the cap — "
-    "degree orientation would cut TOTAL wedges only 21.1M -> 19.3M "
-    "(-9%), and the x64 sweep pushed 1.35G well-spread wedges "
-    "through it in 96 s (concentration, not volume, is what breaks "
-    "the form). r15: the hub-free branch now intersects the two "
-    "endpoints' sorted in-below adjacency arrays per edge instead of "
-    "materializing every wedge as a row — bit-identical counts "
-    "(smallest-corner-once from the closing edge's side; "
-    "pytest-forced), 2.13 -> 1.48 s at sf0.1 — guarded by its own "
-    "array-size and broadcast caps (TRI_ADJ_*; an in-degree hub or "
-    "an unbroadcastable adjacency table falls back to the id-wedge "
-    "join, which remains the all-shuffle scale path). Edges (two "
-    "longs) are all that shuffles; the candidate-pair generation "
-    "reuses q_neardup_jaccard's ppjoin prefix filter via the shared "
-    "nd_pairs build.",
+    "closure accidents before any survivor decision. Algorithm: "
+    "per-edge adjacency intersection. Under a total order each node's "
+    "out-list holds its later neighbours; every edge intersects its "
+    "two endpoints' out-lists, so each triangle is counted once, at "
+    "the edge joining its two earliest corners, and its three corners "
+    "explode into one groupBy. One count-only gate aggregate picks the "
+    "order: id order while the out-degrees satisfy Σ out² <= "
+    "c·|E| (no list longer than √(c·|E|)), else (degree, id) order "
+    "(no list longer than √(2|E|)), so a hub or an in-star never "
+    "builds an unbounded array. The adjacency table is one broadcast "
+    "reused by both joins up to TRI_ADJ_BROADCAST_EDGES, shuffled "
+    "joins past it. Edges (two longs) are all that shuffles; the "
+    "candidate pairs reuse q_neardup_jaccard's prefix-filtered build "
+    "via the shared nd_pairs.",
 )
 def q_graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The shared persisted pair build serves the "computed once,
-    # joined three times" role the pre-r12 localCheckpoint played —
-    # columnar InMemoryTableScan per wedge/close join, and the build
-    # itself is reused across the whole graph family (nd_pairs).
-    e = nd_pairs(spark, sf_dir)
-    # Skew gate (r12): one cheap scalar pre-aggregate over the
-    # persisted pairs finds the HOTTEST node's id-form wedge count
-    # max C(out_deg, 2); past TRI_ID_HUB_WEDGE_CAP (a single task
-    # stalling on one hub — see the constant's probe numbers) the
-    # degree-oriented form takes over, bit-identical counts. Same
-    # driver-scalar control discipline as the CC convergence check.
-    hub_wedges = (
-        e.groupBy("id_lo")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max(F.expr("n * (n - 1) div 2")).alias("w"))
-        .first()[0]
-        or 0
-    )
-    if hub_wedges > TRI_ID_HUB_WEDGE_CAP:
-        return _tri_counts_degree_oriented(e)
-    # r15: hub-free branch — prefer the zero-wedge-row adjacency
-    # intersection when its own guards hold (array bound + broadcast
-    # bound; constants above carry the A/B numbers). The gate scalars
-    # are COUNT-ONLY (one aggregate over the persisted pairs) and run
-    # BEFORE any adjacency array exists, so a pathological in-degree
-    # hub never materializes an |E|-long collect_list row just to be
-    # rejected — the bucket-guard discipline applied to the gate
-    # itself.
-    st = (
-        e.groupBy("id_hi")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n").alias("mx"), F.sum("n").alias("ne"))
-        .first()
-    )
-    if (
-        st["mx"] is not None
-        and st["mx"] <= TRI_ADJ_MAX_IN_DEG
-        and st["ne"] <= TRI_ADJ_BROADCAST_EDGES
-    ):
-        return _tri_counts_adj_intersect(e, _tri_in_below_adj(e))
-    return _tri_counts_id_oriented(e)
-
-
-def _tri_counts_adj_intersect(e: DataFrame, adj: DataFrame) -> DataFrame:
-    """Per-node triangle counts via per-edge adjacency intersection —
-    the zero-wedge-row form for hub-free, broadcastable graphs (gate
-    and A/B numbers at TRI_ADJ_MAX_IN_DEG above). ``adj`` is the
-    checkpointed in-below adjacency: (node, sorted array of a < node
-    with (a, node) in e). A triangle (a, b, c), a < b < c, is counted
-    exactly once at edge (b, c) as a ∈ in(b) ∩ in(c) — the same
-    smallest-corner-once discipline as the wedge forms, so counts are
-    bit-identical (pytest-forced). Inner joins cannot drop a
-    triangle: both endpoints of its closing edge have `a` in-below.
-    Each edge's corner contributions explode as one concat
-    (the a's, b×|∩|, c×|∩|) — 3·T rows, T = triangles, vs 21M wedge
-    rows through the close join."""
-    withn = (
-        e.join(
-            F.broadcast(
-                adj.select(
-                    F.col("node").alias("id_lo"), F.col("nbrs").alias("nb_b")
-                )
-            ),
-            "id_lo",
-        )
-        .join(
-            F.broadcast(
-                adj.select(
-                    F.col("node").alias("id_hi"), F.col("nbrs").alias("nb_c")
-                )
-            ),
-            "id_hi",
-        )
-        .select(
-            F.col("id_lo").alias("b"),
-            F.col("id_hi").alias("c"),
-            F.array_intersect("nb_b", "nb_c").alias("cs"),
-        )
-    )
-    corners = withn.where(F.size("cs") > 0).select(
-        F.explode(
-            F.expr(
-                "concat(cs, array_repeat(b, size(cs)), "
-                "array_repeat(c, size(cs)))"
-            )
-        ).alias("doc_id")
-    )
-    return corners.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_triangles")
-    )
-
-
-def _tri_in_below_adj(e: DataFrame) -> DataFrame:
-    """The checkpointed in-below adjacency (node, nbrs) consumed
-    twice (both broadcast sides) by the intersection form. Built ONLY
-    after the count-only gate has bounded every bucket at
-    TRI_ADJ_MAX_IN_DEG — no array here can exceed 512 KB."""
-    return (
-        e.groupBy(F.col("id_hi").alias("node"))
-        .agg(F.array_sort(F.collect_list("id_lo")).alias("nbrs"))
-        .localCheckpoint()
-    )
-
-
-def _tri_counts_id_oriented(e: DataFrame) -> DataFrame:
-    """Per-node triangle counts via the simpler ID-oriented wedge
-    join (edges kept once as id_lo < id_hi; wedge fan-out is the raw
-    id-order out-degree) — the measured-best form for hub-free
-    corpora like the near-dup pair graph (max degree 221 at sf0.1)."""
-    wedges = (
-        e.alias("e1")
-        .join(e.alias("e2"), F.col("e2.id_lo") == F.col("e1.id_lo"))
-        .where(F.col("e2.id_hi") > F.col("e1.id_hi"))
-        .select(
-            F.col("e1.id_lo").alias("a"),
-            F.col("e1.id_hi").alias("b"),
-            F.col("e2.id_hi").alias("c"),
-        )
-    )
-    tri = wedges.join(
-        e.alias("e3"),
-        (F.col("e3.id_lo") == F.col("b")) & (F.col("e3.id_hi") == F.col("c")),
-    ).select("a", "b", "c")
-    return (
-        tri.select(F.explode(F.array("a", "b", "c")).alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-    )
+    return triangle_counts(nd_pairs(spark, sf_dir))
 
 
 @register(

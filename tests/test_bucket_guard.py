@@ -61,12 +61,13 @@ ALLOWED: dict[tuple[str, str], str] = {
         "collects lineitems per l_orderkey: TPC-H bounds "
         "lines-per-order at 7 — constant bucket; linear consumer "
         "(inline re-flatten)",
-    ("graph.py", "_tri_in_below_adj"):
-        "collects the in-below adjacency per node for the r15 "
-        "triangle intersection form — built ONLY after a count-only "
-        "gate has proven every bucket <= TRI_ADJ_MAX_IN_DEG (65,536; "
-        "512 KB row), so no unbounded array can ever materialize; "
-        "past the cap the query routes to the wedge join instead",
+    ("graph.py", "triangle_counts"):
+        "collects each node's out-list for the triangle intersection "
+        "kernel — built ONLY after the count-only gate "
+        "(triangle_work_ratio) has picked the order: id order only "
+        "while Σ out(v)² <= c·|E|, so no list exceeds √(c·|E|); "
+        "otherwise the (degree, id) order, where no list exceeds "
+        "√(2|E|)",
 }
 
 

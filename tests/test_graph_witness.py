@@ -137,30 +137,10 @@ def test_bipartite_witness_matches_spark_at_x3(spark, x3_graph, name):
     assert ok, f"{name} witness broke at x{REP}: {msg}"
 
 
-def test_triangle_orientations_bit_identical(spark):
-    """r12 skew gate: forcing the degree-oriented path on the fixture
-    corpus must reproduce the id-oriented per-node triangle counts
-    bit-for-bit (any total order counts each triangle exactly once
-    from its smallest corner)."""
-    from sd2_drp_experimentgen_spark.functions.helpers import (
-        release_persisted,
-    )
-    from sd2_drp_experimentgen_spark.operators import graph
-
-    e = graph.nd_pairs(spark, SF)
-    a = sorted(tuple(r) for r in graph._tri_counts_id_oriented(e).collect())
-    b = sorted(
-        tuple(r) for r in graph._tri_counts_degree_oriented(e).collect()
-    )
-    release_persisted()
-    assert a and a == b
-
-
-def test_triangle_gate_picks_id_form_on_fixture(spark, monkeypatch):
-    """The fixture pair graph (max degree 221) sits far below
-    TRI_ID_HUB_WEDGE_CAP, so the registered query stays on the measured-
-    best id form; forcing the cap to 0 flips to degree orientation
-    with identical output."""
+def test_triangle_forced_orders_match_query(spark):
+    """Both orders (c=0 forces degree, c=inf forces id) and the
+    shuffled plain-join path reproduce the registered query's per-node
+    counts, which test_oracle_parity checks against DuckDB."""
     from sd2_drp_experimentgen_spark.functions.helpers import (
         release_persisted,
     )
@@ -171,56 +151,59 @@ def test_triangle_gate_picks_id_form_on_fixture(spark, monkeypatch):
         tuple(r)
         for r in all_specs()["q_graph_triangle_count"].fn(spark, SF).collect()
     )
-    monkeypatch.setattr(graph, "TRI_ID_HUB_WEDGE_CAP", 0)
-    forced = sorted(
-        tuple(r)
-        for r in all_specs()["q_graph_triangle_count"].fn(spark, SF).collect()
-    )
-    release_persisted()
-    assert base == forced
-
-
-def test_triangle_adj_intersect_bit_identical(spark):
-    """r15 intersection form: per-edge intersection of the endpoints'
-    in-below adjacency arrays must reproduce the id-oriented wedge
-    join's per-node counts bit-for-bit (a triangle (a, b, c), a<b<c,
-    is counted exactly once at its closing edge (b, c) as
-    a in in(b) ∩ in(c) — same smallest-corner-once discipline)."""
-    from sd2_drp_experimentgen_spark.functions.helpers import (
-        release_persisted,
-    )
-    from sd2_drp_experimentgen_spark.operators import graph
-
     e = graph.nd_pairs(spark, SF)
-    a = sorted(tuple(r) for r in graph._tri_counts_id_oriented(e).collect())
-    b = sorted(
-        tuple(r)
-        for r in graph._tri_counts_adj_intersect(
-            e, graph._tri_in_below_adj(e)
-        ).collect()
-    )
+    forced = [
+        sorted(tuple(r) for r in graph.triangle_counts(e, **kw).collect())
+        for kw in (
+            {"work_per_edge": 0},
+            {"work_per_edge": float("inf")},
+            {"broadcast_edges": 0},
+        )
+    ]
     release_persisted()
-    assert a and a == b
+    assert base and all(f == base for f in forced)
 
 
-def test_triangle_adj_gate_falls_back_to_wedge_join(spark, monkeypatch):
-    """The intersection form's own guards: forcing either cap to 0
-    (an in-degree hub / an unbroadcastable adjacency) must route the
-    registered query back to the id-oriented wedge join with
-    identical output."""
-    from sd2_drp_experimentgen_spark.functions.helpers import (
-        release_persisted,
-    )
+def _hub_graph(in_star: bool) -> list[tuple[int, int]]:
+    """A 500-edge hub at node 0 plus a 3-out lattice over nodes 1..30
+    (triangles with and without the hub); ``in_star`` mirrors every id
+    v -> 500 - v, so the hub becomes the highest id."""
+    edges = {(0, v) for v in range(1, 501)}
+    edges |= {(i, i + s) for i in range(1, 31) for s in (1, 2, 7)}
+    if in_star:
+        edges = {(500 - b, 500 - a) for a, b in edges}
+    return sorted(edges)
+
+
+def _brute_force_triangles(edges: list[tuple[int, int]]) -> list[tuple]:
+    nbrs: dict[int, set[int]] = {}
+    for a, b in edges:
+        nbrs.setdefault(a, set()).add(b)
+        nbrs.setdefault(b, set()).add(a)
+    counts: dict[int, int] = {}
+    for a, b in edges:
+        for c in nbrs[a] & nbrs[b]:
+            if c > b:
+                for v in (a, b, c):
+                    counts[v] = counts.get(v, 0) + 1
+    return sorted(counts.items())
+
+
+@pytest.mark.parametrize(
+    "in_star,by_degree", [(False, True), (True, False)],
+    ids=["low_id_hub", "in_star"],
+)
+def test_triangle_gate_on_skewed_graphs(spark, in_star, by_degree):
+    """The gate's work bound Σ out(v)² <= c·|E| sends a low-id hub (its
+    whole adjacency is one id-order out-list) to the degree order and
+    keeps its in-star mirror (one-element out-lists) in id order; both
+    match a brute-force count."""
     from sd2_drp_experimentgen_spark.operators import graph
-    from sd2_drp_experimentgen_spark.plans import all_specs
 
-    fn = all_specs()["q_graph_triangle_count"].fn
-    base = sorted(tuple(r) for r in fn(spark, SF).collect())
-    max_in_deg = graph.TRI_ADJ_MAX_IN_DEG
-    monkeypatch.setattr(graph, "TRI_ADJ_MAX_IN_DEG", 0)
-    forced_wedge = sorted(tuple(r) for r in fn(spark, SF).collect())
-    monkeypatch.setattr(graph, "TRI_ADJ_MAX_IN_DEG", max_in_deg)
-    monkeypatch.setattr(graph, "TRI_ADJ_BROADCAST_EDGES", 0)
-    forced_wedge2 = sorted(tuple(r) for r in fn(spark, SF).collect())
-    release_persisted()
-    assert base and base == forced_wedge == forced_wedge2
+    edges = _hub_graph(in_star)
+    e = spark.createDataFrame(edges, "id_lo long, id_hi long")
+    ratio, n_edges = graph.triangle_work_ratio(e)
+    assert n_edges == len(edges)
+    assert (ratio > graph.TRI_WORK_PER_EDGE) == by_degree, ratio
+    got = sorted(tuple(r) for r in graph.triangle_counts(e).collect())
+    assert got == _brute_force_triangles(edges)

@@ -816,9 +816,9 @@ def test_nn_descent_no_matrix_broadcast(spark):
 
 
 def test_triangle_count_join_keys(spark):
-    """Triangle closure must join on edge endpoints (equi), never
-    enumerate all pairs: wedge join on the shared lower endpoint plus
-    the closing (b, c) equi-join."""
+    """Triangle counting must join on edge endpoints (equi), never
+    enumerate all pairs: each edge equi-joins the out-list table on
+    id_lo and again on id_hi before the per-edge intersection."""
     p = plan(all_specs()["q_graph_triangle_count"].fn(spark, SF_T2), "simple")
     assert "CartesianProduct" not in p and "NestedLoop" not in p, p
 

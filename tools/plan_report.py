@@ -95,7 +95,7 @@ REPORT = [
     ("q_dedup_threshold_curve", "r12 vocabulary gate: mask-pair scan on this corpus; four conditional counts in the shared rollup (ppjoin path: one candidate generation at the loosest threshold)"),
     # --- round 6 additions ---
     ("q_sim_range_search", "payload shuffles once keyed (label, sb); pair enumeration joins collapsed cells, never rows"),
-    ("q_graph_triangle_count", "r15 hub-free branch: per-edge adjacency intersection (array_intersect over broadcast in-below adjacency, zero wedge rows), no cartesian; gated fallbacks keep the oriented wedge join"),
+    ("q_graph_triangle_count", "one kernel: each edge equi-joins the checkpointed out-list table (Scan ExistingRDD) on id_lo and on id_hi, both broadcast sides the same table (AQE reuses one exchange at run time), then array_intersect and one explode; zero wedge rows, no cartesian"),
     ("q_emb_nn_descent", "graph-sparse candidates scored by pair joins + MapInPandas; no matrix broadcast"),
     ("q_etl_incremental_join", "all four part-joins share the o_orderkey=l_orderkey key; no theta/cross join"),
     ("q_agg_bloom_membership", "4096-row bit table broadcasts to the probe side (the runtime-filter shape)"),
