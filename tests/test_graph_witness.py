@@ -137,13 +137,11 @@ def test_bipartite_witness_matches_spark_at_x3(spark, x3_graph, name):
     assert ok, f"{name} witness broke at x{REP}: {msg}"
 
 
-def test_triangle_forced_orders_match_query(spark):
-    """Both orders (c=0 forces degree, c=inf forces id) and the
-    shuffled plain-join path reproduce the registered query's per-node
-    counts, which test_oracle_parity checks against DuckDB."""
-    from sd2_drp_experimentgen_spark.functions.helpers import (
-        release_persisted,
-    )
+@pytest.fixture(scope="module")
+def tri_query(spark):
+    """(sf0.001 near-dup pairs, sorted per-node counts of the registered
+    q_graph_triangle_count), which test_oracle_parity checks against
+    DuckDB."""
     from sd2_drp_experimentgen_spark.operators import graph
     from sd2_drp_experimentgen_spark.plans import all_specs
 
@@ -151,17 +149,45 @@ def test_triangle_forced_orders_match_query(spark):
         tuple(r)
         for r in all_specs()["q_graph_triangle_count"].fn(spark, SF).collect()
     )
-    e = graph.nd_pairs(spark, SF)
-    forced = [
-        sorted(tuple(r) for r in graph.triangle_counts(e, **kw).collect())
-        for kw in (
-            {"work_per_edge": 0},
-            {"work_per_edge": float("inf")},
-            {"broadcast_edges": 0},
-        )
-    ]
+    assert base
+    return graph.nd_pairs(spark, SF), base
+
+
+def _tri(e, **kw) -> list[tuple]:
+    from sd2_drp_experimentgen_spark.functions.helpers import (
+        release_persisted,
+    )
+    from sd2_drp_experimentgen_spark.operators import graph
+
+    got = sorted(tuple(r) for r in graph.triangle_counts(e, **kw).collect())
     release_persisted()
-    assert base and all(f == base for f in forced)
+    return got
+
+
+def test_triangle_orientations_bit_identical(tri_query):
+    """Both orders of the kernel, forced (c=0 picks degree order,
+    c=inf id order), reproduce the registered query's per-node counts."""
+    e, base = tri_query
+    assert _tri(e, work_per_edge=0) == base
+    assert _tri(e, work_per_edge=float("inf")) == base
+
+
+def test_triangle_adj_intersect_bit_identical(tri_query):
+    """The gated out-list intersection matches a brute-force Python
+    count over the same collected pairs, and the registered query."""
+    e, base = tri_query
+    edges = [(r["id_lo"], r["id_hi"]) for r in e.collect()]
+    got = _tri(e)
+    assert got == _brute_force_triangles(edges)
+    assert got == base
+
+
+def test_triangle_adj_gate_falls_back_to_wedge_join(tri_query):
+    """Past the broadcast bound (broadcast_edges=0) both joins shuffle;
+    the plain-join path gives the same counts in either order."""
+    e, base = tri_query
+    assert _tri(e, broadcast_edges=0) == base
+    assert _tri(e, broadcast_edges=0, work_per_edge=0) == base
 
 
 def _hub_graph(in_star: bool) -> list[tuple[int, int]]:
