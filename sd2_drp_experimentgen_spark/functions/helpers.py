@@ -23,7 +23,7 @@ def _round_halfup(col: Column | str, scale: int) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     p = 10**scale
-    return F.floor(c * F.lit(p) + F.lit(0.5)) / F.lit(p)
+    return F.floor(c * p + 0.5) / p
 
 
 def r4(col: Column | str) -> Column:
@@ -73,7 +73,7 @@ def int_units(col: Column | str, scale: int = 4) -> Column:
     IEEE op. Headroom: 1e14 units stay far below 2^53.
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.floor(c * F.lit(10**scale) + F.lit(0.5)).cast("long")
+    return F.floor(c * 10**scale + 0.5).cast("long")
 
 
 def sql_units(expr: str, scale: int = 4) -> str:
@@ -100,7 +100,7 @@ def exact_sum(col: Column | str, scale: int = 4) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(int_units(c, scale).cast("decimal(38,0)")).cast(
         "double"
-    ) / F.lit(float(10**scale))
+    ) / float(10**scale)
 
 
 def sql_exact_sum(expr: str, scale: int = 4) -> str:

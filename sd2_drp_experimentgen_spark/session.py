@@ -15,6 +15,19 @@ factory builds the process's first session. A driver-provided foreign
 session keeps Spark's defaults for them: a static conf cannot be set at
 runtime, so ``configure_session`` does not try.
 
+``spark.python.sql.dataFrameDebugging.enabled=false`` is builder-only
+too: pyspark reads it once per process, and on a foreign session it is
+the caller's error-reporting choice. Off, plan building skips the Python
+call-site capture that PySpark runs around every ``functions`` call and
+Column method. The trade-off: a runtime error on a session this factory
+built no longer names the Python line that built the failing expression.
+A divide by
+zero under ANSI still reads ``[DIVIDE_BY_ZERO] Division by zero. Use
+`try_divide` ... SQLSTATE: 22012`` with a ``== DataFrame ==`` section,
+but that section says ``"divide" was called from
+java.base/jdk.internal.reflect.NativeMethodAccessorImpl.invoke0`` where
+it said ``"__truediv__" was called from <file>.py:<line>``.
+
 Scale posture: on a real cluster the same factory applies; only
 ``master`` and the shuffle-partition count change (shuffle partitions
 should track cluster cores × 2-3 at 100 TB, or be left to AQE coalescing
@@ -125,6 +138,17 @@ def get_spark(
         # 3,917 classes at sf0.01. The count depends on code shapes, not
         # data size.
         .config("spark.sql.codegen.cache.maxEntries", "1024")
+        # PySpark wraps every pyspark.sql.functions call and Column
+        # method in a call-site capture while this is on (the default):
+        # per call, five py4j round trips (getActiveSession, a
+        # reflection lookup, a conf read, set and clear), a Python
+        # stack walk and a failed IPython import. Off (with the literal
+        # folding in functions/helpers), one warm build of the perfbench
+        # experiment_etl list sends 1,385 py4j commands instead of 4,440
+        # (q_agg_groupby_q1: 181 instead of 930) and corpus_dedup 1,002
+        # instead of 2,421, not counting py4j's proxy deletes. Builder
+        # only, like the codegen cache (module docstring).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -125,3 +125,40 @@ def test_codegen_cache_holds_a_pipeline_pass(spark):
     # feature frame into a second shape (4 new classes in ~1 of 4 warm
     # passes), which no cache size avoids.
     assert codegen_compiles(spark) - before < 10
+
+
+def test_plan_build_skips_call_site_capture(spark):
+    """Building a query's plan does not pay PySpark's per-Column call-site
+    capture: with ``spark.python.sql.dataFrameDebugging.enabled`` on, each
+    ``functions`` call and Column method sends five py4j commands of its
+    own. One warm q_agg_groupby_q1 build sent 930 commands with the
+    capture on and ~180 with it off."""
+    import threading
+
+    from sd2_drp_experimentgen_spark.plans import all_specs
+    from tests.conftest import SF_T1
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+    build = all_specs()["q_agg_groupby_q1"].fn
+    build(spark, SF_T1)  # warm: the first build reads the table schemas
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    caller = threading.get_ident()
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        # py4j's finalizer thread sends proxy deletes in bursts, on its
+        # own schedule (gc.disable() does not stop those from refcount
+        # drops); count only what the build itself sends.
+        if threading.get_ident() == caller:
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        build(spark, SF_T1)
+    finally:
+        del client.send_command
+    assert len(sent) < 400

@@ -136,8 +136,15 @@ REPORT = [
 ]
 
 
+# The committed PLANS.md was built on local[32] (get_spark's default when
+# SPARK_GRAFT_CPUS is unset). The default parallelism shows in some plans
+# (a range source's splits, the Exchanges that repartition to it), so the
+# report pins it instead of following the caller's environment.
+MASTER = "local[32]"
+
+
 def render(sf_dir: str) -> str:
-    spark = get_spark(app_name="sd2drp-plans", shuffle_partitions=8)
+    spark = get_spark(app_name="sd2drp-plans", master=MASTER, shuffle_partitions=8)
     specs = all_specs()
 
     lines = [
@@ -170,10 +177,14 @@ def render(sf_dir: str) -> str:
 # Spark's auto-generated CTE/subquery numbering renumber between runs
 # of identical code — strip them so --check flags plan-shape drift only.
 _ID = re.compile(r"#\d+L?|@[0-9a-f]{6,}|subquery#\d+|cte\d+|plan_id=\d+")
+# Tables the queries stage under the checkout's .scratch/ are scanned by
+# absolute path, so the checkout root shows in their plans; strip it so a
+# copy of the checkout elsewhere renders the same report.
+_CHECKOUT = re.compile(r"file:\S*?/\.scratch/")
 
 
 def _normalize(text: str) -> str:
-    return _ID.sub("#x", text)
+    return _ID.sub("#x", _CHECKOUT.sub("file:<checkout>/.scratch/", text))
 
 
 def check(sf_dir: str, out: str) -> int:
