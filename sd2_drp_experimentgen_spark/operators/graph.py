@@ -745,7 +745,7 @@ def q_dedup_survivor_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Past the budget the degree order caps every out-list at √(2|E|)
 # (total work under 2|E|·√(2|E|)), at the price of a degree join the
 # id order does not pay. Measured on 4 cores, local[4] (SCALE.md,
-# last section; tools/triangle_skew_probe.py): the sf0.1 near-dup pair
+# last section; `tools/ladder.py synthetic`): the sf0.1 near-dup pair
 # graph reads Σout²/|E| = 120 and runs 4.7 s in id order against 6.9 s
 # in degree order; a low-id hub of 16,384 edges over a 600k-edge
 # lattice reads 438, where degree order is already ahead (4.8 s

@@ -134,7 +134,8 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tasks; stage 2 merges the 48 partials. count/sum re-aggregate "
     "losslessly, so the result hash-matches the unsalted oracle. "
     "Honest scope, per the measured study (SCALE.md round-4 skew "
-    "study, tools/skew_study.py): for DECOMPOSABLE aggregates like "
+    "study, tools/ladder.py facts --probe skew): for DECOMPOSABLE "
+    "aggregates like "
     "these, map-side partial aggregation already collapses a hot key "
     "to one row per task and salting measured as pure overhead "
     "(0.26s naive vs 0.45s salted on a 50%-one-key 19M-row build) — "

@@ -42,7 +42,7 @@ BROADCAST_MAX_ROWS = 200_000
 # the product at this many bytes regardless of n: same flops,
 # bit-identical output, and FASTER (the chunk stays cache-resident
 # through the rank loop). Measured worker-RSS/wall deltas per scale:
-# tools/vec_scale_study.py output, recorded in SCALE.md round 10.
+# `tools/ladder.py vectors` output, recorded in SCALE.md round 10.
 SIMS_BUDGET_BYTES = 64 << 20
 
 
@@ -56,8 +56,8 @@ def _fanout(src: DataFrame, n: int) -> DataFrame:
     vec_id probe column is ~8 B/row, so even a gate-ceiling corpus
     (200k rows) arrives as ONE file split — and each probe row costs
     O(n) sims + an O(n log n) rank in the kernel, so a single task
-    would serialize the entire n² product (measured in
-    tools/vec_scale_study.py: the x32 corpus ran its whole broadcast
+    would serialize the entire n² product (measured by
+    `tools/ladder.py vectors`: the x32 corpus ran its whole broadcast
     path in one task before this). Repartitioning the tiny key column
     is one negligible shuffle that restores ~cores-way parallelism;
     ~256 probe rows per task keeps scheduling overhead invisible at
@@ -162,7 +162,7 @@ def _block_pair_frames(blocks: DataFrame):
     symmetric, so an ordered pair and its mirror compute the SAME
     product matrix; the kernels read both directions out of one matmul
     for off-diagonal pairs (round 10 — halves the blocked path's
-    compute and its cell shuffle, measured in tools/vec_scale_study.py).
+    compute and its cell shuffle, measured by `tools/ladder.py vectors`).
     Kernels receive l_block/r_block to tell the diagonal apart."""
     left = blocks.select(
         F.col("block").alias("l_block"), F.col("rows").alias("l_rows")
@@ -187,9 +187,10 @@ def _cell_to_mat(cell):
 
 
 # Composite-key vectorized selection (round 10). The first x128 run of
-# tools/vec_scale_study.py measured the per-row Python lexsort loops as
-# the kernels' dominant cost at 256k rows (q_emb_knn_graph 898 s,
-# q_sim_cosine_topk 1 789 s — SCALE.md round 10). Selection now packs
+# the vector ladder (`tools/ladder.py vectors`) measured the per-row
+# Python lexsort loops as the kernels' dominant cost at 256k rows
+# (q_emb_knn_graph 898 s, q_sim_cosine_topk 1 789 s — SCALE.md round
+# 10). Selection now packs
 # the quantized sim above the candidate's within-task COLUMN RANK —
 # key = sim_u * 2^40 - rank — so one argpartition per chunk replaces n
 # per-row lexsorts. Candidate ids are ascending within every task (the
@@ -529,19 +530,20 @@ def q_dedup_embedding_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _topk_pairs_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-k cosine pairs with NO driver collect: block-partitioned
-    matrix product. B² ordered block pairs, each task computes its
-    (n/B)×(n/B) sims, filters to id_lo < id_hi (each unordered pair
-    appears in exactly one ordered block pair under that filter), keeps
-    a local top-k, and a global TakeOrdered merges ≤ B²·k candidates.
-    Same rounding-before-ranking contract as the broadcast path, so the
-    two paths are bit-identical."""
+    matrix product over the B(B+1)/2 unordered block pairs of
+    _block_pair_frames. Each task computes its (n/B)×(n/B) sims once and
+    reads both orientations off that one matmul (id_lo < id_hi, plus the
+    mirror off the diagonal), so every vector pair is scored exactly
+    once; it keeps a local top-k, and a global TakeOrdered merges
+    ≤ B(B+1)/2·k candidates. Same rounding-before-ranking contract as
+    the broadcast path, so the two paths are bit-identical."""
     import numpy as np
 
     n = _embeddings_count(spark, sf_dir)
     pairs = _block_pair_frames(_embedding_blocks(spark, sf_dir, n))
     budget = SIMS_BUDGET_BYTES  # resolved DRIVER-side: workers
     # re-import the module, so a kernel-side read could not be
-    # overridden by tests or the scale study
+    # overridden by tests or the scale ladder
 
     def topk_per_pair(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -604,9 +606,11 @@ def _topk_pairs_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _nn_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-vector nearest neighbor with NO driver collect: each of
-    the B² block pairs emits the best right-block candidate per left
-    vector (vectorized max + min-id tiebreak on the rounded sims), then
-    one row_number window over the n·B candidates picks the global NN.
+    the B(B+1)/2 unordered block pairs emits, from one matmul, the best
+    right-block candidate per left vector and, off the diagonal, the
+    best left-block candidate per right vector (vectorized max + min-id
+    tiebreak on the rounded sims); then one row_number window over the
+    n·B candidates picks the global NN.
     Bit-identical to the broadcast path (same round-then-rank rule)."""
     import numpy as np
 
@@ -616,7 +620,7 @@ def _nn_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _block_pair_frames(_embedding_blocks(spark, sf_dir, n))
     budget = SIMS_BUDGET_BYTES  # resolved DRIVER-side: workers
     # re-import the module, so a kernel-side read could not be
-    # overridden by tests or the scale study
+    # overridden by tests or the scale ladder
 
     def nn_per_pair(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1416,10 +1420,12 @@ KNN_K = 5  # neighbors per vector in the kNN graph
 
 
 def _knn_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact kNN graph with NO driver collect: each of the B² block
-    pairs keeps a per-left-vector local top-K over its right block
-    (a global top-K neighbor is necessarily within the top-K of its
-    own block), then one row_number window over the n·B·K candidates
+    """Exact kNN graph with NO driver collect: each of the B(B+1)/2
+    unordered block pairs keeps, from one matmul, a per-left-vector
+    local top-K over its right block and, off the diagonal, a
+    per-right-vector top-K over its left block (a global top-K neighbor
+    is necessarily within the top-K of its own block), then one
+    row_number window over the n·B·K candidates
     picks the global top-K per src. Rounding applied INSIDE numpy with
     the oracle's integer formula before ranking, and the merge window
     orders on the quantized sim (exact in float64) + dst — bit-identical
@@ -1432,7 +1438,7 @@ def _knn_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _block_pair_frames(_embedding_blocks(spark, sf_dir, n))
     budget = SIMS_BUDGET_BYTES  # resolved DRIVER-side: workers
     # re-import the module, so a kernel-side read could not be
-    # overridden by tests or the scale study
+    # overridden by tests or the scale ladder
 
     def knn_per_pair(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

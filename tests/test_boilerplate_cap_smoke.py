@@ -2,7 +2,7 @@
 (VERDICT r8 item 7).
 
 tests/test_bucket_cap.py pins the cap's semantics on a constructed
-toy corpus; tools/dedup_scale_study.py --boilerplate measures it at
+toy corpus; tools/ladder.py documents --probe boilerplate measures it at
 sf0.1 scale but only runs ad hoc in round reports. This smoke closes
 the gap: a ~2k-doc corpus (sf0.001 documents replicated 4x with
 replica-distinct bodies, every doc sharing the study's 64-token
@@ -22,7 +22,7 @@ import pytest
 from sd2_drp_experimentgen_spark.functions.helpers import release_persisted
 from sd2_drp_experimentgen_spark.plans import all_specs
 from tests.conftest import SF_T1
-from tools.dedup_scale_study import (
+from tools.ladder import (
     BP_RUNGS,
     _bp_audit_count,
     replicate_documents,

@@ -42,7 +42,7 @@ SF = "/root/testdata/sf0.001"
 def x3_docs(spark, tmp_path_factory):
     from sd2_drp_experimentgen_spark.schemas import TABLE_NAMES
 
-    dedup = _load("dedup_scale_study")
+    dedup = _load("ladder")
     out = tmp_path_factory.mktemp("x3docs")
     for t in TABLE_NAMES:
         df = spark.read.parquet(f"{SF}/{t}.parquet")
@@ -59,7 +59,7 @@ def x3_docs(spark, tmp_path_factory):
 def test_doc_witness_matches_spark_at_x3(spark, x3_docs, name):
     import duckdb
 
-    gss = _load("graph_scale_study")
+    gss = _load("ladder")
     vl = _load("verify_local")
     from sd2_drp_experimentgen_spark.functions.helpers import (
         release_persisted,
@@ -91,7 +91,7 @@ def test_doc_witness_matches_spark_at_x3(spark, x3_docs, name):
 def x3_graph(spark, tmp_path_factory):
     from sd2_drp_experimentgen_spark.schemas import TABLE_NAMES
 
-    gss = _load("graph_scale_study")
+    gss = _load("ladder")
     out = tmp_path_factory.mktemp("x3graph")
     for t in TABLE_NAMES:
         df = spark.read.parquet(f"{SF}/{t}.parquet")
@@ -105,7 +105,7 @@ def x3_graph(spark, tmp_path_factory):
 def test_bipartite_witness_matches_spark_at_x3(spark, x3_graph, name):
     import duckdb
 
-    gss = _load("graph_scale_study")
+    gss = _load("ladder")
     vl = _load("verify_local")
     from sd2_drp_experimentgen_spark.functions.helpers import (
         release_persisted,
@@ -128,7 +128,7 @@ def test_bipartite_witness_matches_spark_at_x3(spark, x3_graph, name):
     # correction: release_persisted() only drops tracked_persist
     # frames (none exist on the bipartite rungs), NOT localCheckpoint
     # RDD blocks — those free when the Python refs are GC'd, so the
-    # real hygiene is the study's _drop_checkpoints discipline.
+    # real hygiene is the ladder's release() discipline.
     release_persisted()
     import gc
 

@@ -92,7 +92,7 @@ def test_sims_chunking_bit_identical(spark, monkeypatch):
 def test_fanout_spreads_probe_rows(spark):
     """The broadcast-path probe column must not arrive as one task: a
     single file split serializes the whole n-squared product (measured
-    in tools/vec_scale_study.py). ~256 rows per task, capped at the
+    by `tools/ladder.py vectors`). ~256 rows per task, capped at the
     session's parallelism."""
     from sd2_drp_experimentgen_spark.operators import vectors
     from sd2_drp_experimentgen_spark.sources.tables import load_table
